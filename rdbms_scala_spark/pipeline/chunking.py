@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 _CHUNK_W = 512  # chunk width, chars
 _CHUNK_S = 384  # stride, chars (overlap = width - stride = 128)
@@ -696,26 +697,11 @@ def pipeline_decontamination_report(
 
 from rdbms_scala_spark.pipeline.dedup import _contam_sh_chain as _sh_chain
 
-#: session-materialized CDC feed between the two derived corpus
-#: epochs, keyed (applicationId, sf_dir) and fingerprint-invalidated
-#: like dedup._SHINGLE_CACHE; registered in
-#: session.evict_session_relations.
-_CDC_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-#: session-materialized v0 STANDING FLAG relation (the flagged-doc
-#: ids of the standing decontamination report) — in production this
-#: is a stored table maintained by the previous run; recomputing it
-#: per call is a full corpus overlap join and was the x64 SCALE
-#: tier's dominant cost (17.8 s of which ~14 s was the standing
-#: report, not the delta). Same keying/eviction as _CDC_CACHE.
-_V0_FLAGS_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
 
 def _decontam_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The change feed between corpus epoch v0 (``documents``) and the
-    derived v1 (see ``pipeline_decontamination_incremental``),
-    localCheckpoint-materialized ONCE per (session, table
-    fingerprint). Three consumers read it — the op counters, the
+    derived v1 (see ``pipeline_decontamination_incremental``), a
+    session relation. Three consumers read it — the op counters, the
     delta scoring, and the flag-removal join — and an unmaterialized
     feed would re-run the full-outer CDC join per consumer (Spark
     does not share common subtrees across crossJoin/union branches;
@@ -723,21 +709,15 @@ def _decontam_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     production the change feed IS a stored table; the checkpoint is
     its session analog, and it is batch-sized (changed rows only),
     never corpus-sized."""
+    return session_relation(
+        spark, "decontam_cdc", sf_dir, "documents", lambda: _decontam_cdc_build(spark, sf_dir)
+    )
+
+
+def _decontam_cdc_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rdbms_scala_spark.catalog import table_path
-    from rdbms_scala_spark.pipeline.dedup import _table_fingerprint
     from rdbms_scala_spark.pipeline.snapshot import snapshot_diff
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _CDC_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _CDC_CACHE[key]
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     # v1 derives from an independent scan (NOT load_table, which
     # memoizes the DataFrame per session+path and would hand back the
@@ -770,9 +750,7 @@ def _decontam_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    df = snapshot_diff(docs, v1, keys=["doc_id"]).localCheckpoint(eager=True)
-    _CDC_CACHE[key] = (fp, df)
-    return df
+    return snapshot_diff(docs, v1, keys=["doc_id"]).localCheckpoint(eager=True)
 
 
 def _decontam_bench_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,40 +788,26 @@ def _contam_flags(bench: DataFrame, train_sh: DataFrame) -> DataFrame:
 
 
 def _v0_standing_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STANDING flag relation (flagged v0 train doc ids),
-    localCheckpoint-materialized once per (session, table
-    fingerprint). In production this is the stored output of the
+    """The STANDING flag relation (flagged v0 train doc ids), a
+    session relation. In production this is the stored output of the
     previous decontamination run — the thing the incremental readout
     merges FORWARD; recomputing it per call is a full corpus overlap
     join, which the first SCALE measurement showed dominating the
-    x64 wall (the delta work is batch-sized, the standing report is
-    not). It is also consumed twice per call (the f0 count and the
-    flag-removal join), so materialization halves even the first
-    call's cost."""
-    from rdbms_scala_spark.pipeline.dedup import (
-        _table_fingerprint,
-        contamination_shingles,
-    )
+    x64 wall (17.8 s of which ~14 s was the standing report: the
+    delta work is batch-sized, the standing report is not). It is
+    also consumed twice per call (the f0 count and the flag-removal
+    join), so materialization halves even the first call's cost."""
+    from rdbms_scala_spark.pipeline.dedup import contamination_shingles
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _V0_FLAGS_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _V0_FLAGS_CACHE[key]
-    train0 = contamination_shingles(spark, sf_dir).filter(
-        F.col("doc_id") % 29 != 0
-    )
-    df = _contam_flags(
-        _decontam_bench_shingles(spark, sf_dir), train0
-    ).localCheckpoint(eager=True)
-    _V0_FLAGS_CACHE[key] = (fp, df)
-    return df
+    def build() -> DataFrame:
+        train0 = contamination_shingles(spark, sf_dir).filter(
+            F.col("doc_id") % 29 != 0
+        )
+        return _contam_flags(
+            _decontam_bench_shingles(spark, sf_dir), train0
+        ).localCheckpoint(eager=True)
+
+    return session_relation(spark, "v0_standing_flags", sf_dir, "documents", build)
 
 
 def _decontam_incremental_oracle() -> str:

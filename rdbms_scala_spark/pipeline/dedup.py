@@ -34,6 +34,7 @@ from pyspark.sql.window import Window as W
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 # ---------------------------------------------------------------------------
 # shared building blocks
@@ -380,42 +381,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PAIR_CACHE: dict[tuple[str, str, int], tuple[str, DataFrame]] = {}
-_SHINGLE_CACHE: dict[tuple[str, str, int], tuple[str, DataFrame]] = {}
-
-
-def _table_fingerprint(sf_dir: str, name: str) -> str:
-    """Cheap driver-side modification fingerprint of a parquet table:
-    (path, size, mtime_ns) of every data file under it, hashed. Lets
-    the pair cache detect an overwritten table (e.g. re-amplifying
-    into the same /tmp tier dir) without reading any data."""
-    import hashlib
-    import os
-
-    root = os.path.join(sf_dir, f"{name}.parquet")
-    parts: list[str] = []
-    if os.path.isdir(root):
-        for dirpath, _dirs, files in os.walk(root):
-            for f in sorted(files):
-                p = os.path.join(dirpath, f)
-                st = os.stat(p)
-                parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
-    elif os.path.exists(root):
-        st = os.stat(root)
-        parts.append(f"{root}|{st.st_size}|{st.st_mtime_ns}")
-    # os.walk's directory order is filesystem-dependent; sort the full
-    # entry list so an identical on-disk table always fingerprints the
-    # same (an order-sensitive hash caused spurious cache invalidation).
-    parts.sort()
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()
-
-
 def cached_jaccard_pairs(
     spark: SparkSession, sf_dir: str, max_df: int = MAX_SHINGLE_DF
 ) -> DataFrame:
-    """The >=0.7 trigram-Jaccard pair relation, materialized ONCE per
-    (session, sf_dir, df-cap) behind an eager ``localCheckpoint`` and
-    shared by every graph query built on it (`dedup_ngram_jaccard`,
+    """The >=0.7 trigram-Jaccard pair relation, a session relation
+    (see ``session.session_relation``) per df-cap, shared by every
+    graph query built on it (`dedup_ngram_jaccard`,
     `dedup_connected_components`, `graph_pagerank`). The shingle
     inverted-index self-join dominates each of those queries' cost
     (SCALE.md's x64 pagerank row is ~all edge derivation), so a
@@ -423,63 +394,33 @@ def cached_jaccard_pairs(
     once per query. At 100 TB the same role is played by a persisted
     pairs table refreshed with the corpus (every serious dedup
     pipeline materializes its candidate-pair relation; this cache is
-    the single-session form of that discipline).
+    the single-session form of that discipline)."""
 
-    Staleness contract: an entry is valid only while the documents
-    table's file fingerprint (sizes + mtimes, `_table_fingerprint`)
-    is unchanged — overwriting the table under the same path (e.g.
-    re-amplifying into the same /tmp tier dir) invalidates and
-    rebuilds the entry rather than serving stale pairs. Superseded
-    entries are dropped from the dict and best-effort unpersisted;
-    final block reclamation is Spark's ContextCleaner once the
-    driver-side reference is gone."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), max_df)
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _PAIR_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _PAIR_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    df = (
-        pairwise_jaccard(shingles_df(docs, n=3), max_df=max_df)
-        .filter(F.col("jaccard") >= 0.7)
-        .localCheckpoint(eager=True)
-    )
-    _PAIR_CACHE[key] = (fp, df)
-    return df
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        return (
+            pairwise_jaccard(shingles_df(docs, n=3), max_df=max_df)
+            .filter(F.col("jaccard") >= 0.7)
+            .localCheckpoint(eager=True)
+        )
+
+    return session_relation(spark, "jaccard_pairs", sf_dir, "documents", build, max_df)
 
 
 def cached_doc_shingles(
     spark: SparkSession, sf_dir: str, n: int = 3
 ) -> DataFrame:
-    """The distinct (doc_id, shingle) relation, materialized ONCE per
-    (session, sf_dir, n) behind an eager ``localCheckpoint`` — the
-    shared input for iterative consumers that scan it several times
-    per call (``sample_coverage_greedy`` reads it ~2k times for k
-    greedy rounds; without the checkpoint every round replays the
-    tokenize + explode + distinct). Same staleness contract as
-    ``cached_jaccard_pairs``: entries are keyed on the documents
-    table's file fingerprint and rebuilt when it changes."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), n)
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _SHINGLE_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    df = shingles_df(docs, n=n, distinct=True).localCheckpoint(eager=True)
-    _SHINGLE_CACHE[key] = (fp, df)
-    return df
+    """The distinct (doc_id, shingle) relation, a session relation per
+    ``n`` — the shared input for iterative consumers that scan it
+    several times per call (``sample_coverage_greedy`` reads it ~2k
+    times for k greedy rounds; without the checkpoint every round
+    replays the tokenize + explode + distinct)."""
+
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        return shingles_df(docs, n=n, distinct=True).localCheckpoint(eager=True)
+
+    return session_relation(spark, "doc_shingles", sf_dir, "documents", build, n)
 
 
 # ---------------------------------------------------------------------------
@@ -550,54 +491,38 @@ def minhash_band_buckets(
     ).select("doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("band_hash"))
 
 
-_MINHASH_CACHE: dict[tuple[str, str], tuple[str, DataFrame, DataFrame]] = {}
-
-
 def cached_minhash_sig_cand(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The (signatures, banded-candidate-pairs) relations of the
-    MinHash tier, materialized ONCE per (session, sf_dir) behind
-    eager ``localCheckpoint``s and shared by every query built on
+    MinHash tier, one session relation shared by every query built on
     them (`dedup_minhash_lsh`, `dedup_minhash_clusters` through its
     composition, `dedup_minhash_calibration`) — the signature build
     (num_perm/4 md5 calls per shingle instance) and the banded
     exchange dominate each of those queries, and the session suite
-    was paying them once per query (the `cached_jaccard_pairs`
-    waste, round 7, replayed on the MinHash tier). Same staleness
-    contract: entries key on the documents table's file fingerprint
-    and superseded checkpoints are dropped + best-effort unpersisted.
-    At 100 TB the persisted analog is the signature/candidate tables
-    every production dedup job materializes next to the corpus."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _MINHASH_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1], hit[2]
-    if hit is not None:
-        for df in hit[1:]:
-            try:
-                df._jdf.queryExecution().toRdd().unpersist(False)
-            except Exception:
-                pass  # ContextCleaner reclaims once the dict ref is gone
-        del _MINHASH_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    sig = minhash_signatures(shingles_df(docs, n=3, distinct=False)).localCheckpoint(
-        eager=True
-    )
-    cand = (
-        expand_bucket_pairs(
-            minhash_band_buckets(sig),
-            keys=["band", "band_hash"],
-            payload=["doc_id"],
-            keep=lambda bn: (bn >= 2) & (bn <= _BAND_BUCKET_CAP),
+    was paying them once per query. At 100 TB the persisted analog is
+    the signature/candidate tables every production dedup job
+    materializes next to the corpus."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        docs = load_table(spark, sf_dir, "documents")
+        sig = minhash_signatures(
+            shingles_df(docs, n=3, distinct=False)
+        ).localCheckpoint(eager=True)
+        cand = (
+            expand_bucket_pairs(
+                minhash_band_buckets(sig),
+                keys=["band", "band_hash"],
+                payload=["doc_id"],
+                keep=lambda bn: (bn >= 2) & (bn <= _BAND_BUCKET_CAP),
+            )
+            .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    _MINHASH_CACHE[key] = (fp, sig, cand)
-    return sig, cand
+        return sig, cand
+
+    return session_relation(spark, "minhash_sig_cand", sf_dir, "documents", build)
 
 
 def _minhash_oracle() -> str:
@@ -808,9 +733,6 @@ def _simhash_oracle() -> str:
     """
 
 
-_SIMHASH_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL SimHash candidate pair relation — every distinct pair
     the two-level banding ladder surfaces, with its exact Hamming
@@ -818,11 +740,9 @@ def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ``hamming <= 10``; ``dedup_simhash_candidate_histogram``
     profiles the whole relation (accepted and rejected bands) for
     threshold tuning. Shared so the production pair set and its
-    tuning readouts can never drift apart — and materialized ONCE per
-    (session, sf_dir) behind an eager localCheckpoint with the
-    ``cached_jaccard_pairs`` staleness contract, so the three simhash
-    queries pay the fingerprint + banding derivation once per session
-    (the ``cached_minhash_sig_cand`` discipline applied to this tier).
+    tuning readouts can never drift apart — and a session relation, so
+    the three simhash queries pay the fingerprint + banding derivation
+    once per session.
 
     Per doc: 64-bit fingerprint = sign-aggregate of shingle-hash bits
     (trigram shingles, not bare tokens — the corpus vocabulary is
@@ -842,17 +762,12 @@ def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding comment below); exact Hamming check via bit_count(xor)
     summed over halves. Everything is built-in exprs — no Python in
     the hot path."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    table_fp = _table_fingerprint(sf_dir, "documents")
-    hit = _SIMHASH_CACHE.get(cache_key)
-    if hit is not None and hit[0] == table_fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _SIMHASH_CACHE[cache_key]
+    return session_relation(
+        spark, "simhash_cand", sf_dir, "documents", lambda: _simhash_cand_build(spark, sf_dir)
+    )
+
+
+def _simhash_cand_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = shingles_df(docs, n=3, distinct=True).withColumnRenamed("shingle", "tok")
     tok = tok.withColumn("h0", F.md5(F.concat(F.lit("0:"), F.col("tok")))).withColumn(
@@ -970,7 +885,6 @@ def simhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b", "hamming")
         .localCheckpoint(eager=True)
     )
-    _SIMHASH_CACHE[cache_key] = (table_fp, out)
     return out
 
 
@@ -2470,9 +2384,6 @@ def substring_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", tokens().alias("t"))
 
 
-_SUBSTR_COUNTS_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def _substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, i, h): every document's positioned k-token anchor-run
     hashes — one md5 per offset via a map-only ``transform`` (no
@@ -2493,8 +2404,7 @@ def _substring_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _substring_dup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(h, n): the repeated anchor-hash relation (corpus-wide
     occurrence count >= 2) — the dup-hash table of the
-    exact-substring tier, session-materialized ONCE (localCheckpoint,
-    `cached_jaccard_pairs` staleness contract) because THREE readers
+    exact-substring tier, a session relation because THREE readers
     ride it: the df-cap hot probe, the span semi-join, and the
     removal-stats call's second spans derivation. Without the cache
     each reader re-pays the full tokenize+md5 pass over the corpus
@@ -2503,26 +2413,17 @@ def _substring_dup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dup-hash table (it is the removal list's index). Size is
     distinct-REPEATED-hashes only (far below token volume); at 100 TB
     this is the relation you would scratch-parquet instead."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    table_fp = _table_fingerprint(sf_dir, "documents")
-    hit = _SUBSTR_COUNTS_CACHE.get(cache_key)
-    if hit is not None and hit[0] == table_fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _SUBSTR_COUNTS_CACHE[cache_key]
-    counts = (
-        _substring_runs(spark, sf_dir)
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .localCheckpoint(eager=True)
-    )
-    _SUBSTR_COUNTS_CACHE[cache_key] = (table_fp, counts)
-    return counts
+
+    def build() -> DataFrame:
+        return (
+            _substring_runs(spark, sf_dir)
+            .groupBy("h")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .filter(F.col("n") >= 2)
+            .localCheckpoint(eager=True)
+        )
+
+    return session_relation(spark, "substring_dup_counts", sf_dir, "documents", build)
 
 
 def substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2963,9 +2864,6 @@ _WINNOW_ORACLE = f"""
 """
 
 
-_WINNOW_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """The winnowing SELECTION (Schleimer/Wilkerson/Aiken): hash every
     k-token gram, then for EVERY window of w consecutive gram
@@ -3021,38 +2919,24 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
 def cached_winnow_raw(
     spark: SparkSession, sf_dir: str, checkpoint: bool = True
 ) -> DataFrame:
-    """The UNCAPPED winnowing fingerprint relation (doc_id, h),
-    materialized ONCE per (session, sf_dir) behind an eager
-    localCheckpoint — this is the session stand-in for the PERSISTED
+    """The UNCAPPED winnowing fingerprint relation (doc_id, h), a
+    session relation — the session stand-in for the PERSISTED
     fingerprint store a production corpus keeps next to the data:
     gram hashing + the per-window min dominate the tier's cost, and
     every consumer (pair join, tier report, incremental probe)
-    derives from this one relation with its own df-cap stance. Same
-    staleness contract as the pair cache (documents file
-    fingerprint). ``checkpoint=False`` returns the raw lineage
-    without materializing or caching — the plan-pin tests inspect
-    the derivation through it."""
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp_tag = _table_fingerprint(sf_dir, "documents")
-    if checkpoint:  # raw-lineage callers must not see the cache
-        hit = _WINNOW_CACHE.get(key)
-        if hit is not None and hit[0] == fp_tag:
-            return hit[1]
-        if hit is not None:
-            try:
-                hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-            except Exception:
-                pass
-            del _WINNOW_CACHE[key]
-    fp0 = winnow_fingerprints(load_table(spark, sf_dir, "documents"))
-    if not checkpoint:
-        return fp0
-    fp0 = fp0.localCheckpoint(eager=True)
-    _WINNOW_CACHE[key] = (fp_tag, fp0)
-    return fp0
+    derives from this one relation with its own df-cap stance.
+    ``checkpoint=False`` returns the raw lineage without
+    materializing or caching — the plan-pin tests inspect the
+    derivation through it."""
 
+    def raw() -> DataFrame:
+        return winnow_fingerprints(load_table(spark, sf_dir, "documents"))
 
-_WINNOW_CAPPED_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
+    if not checkpoint:  # raw-lineage callers must not see the cache
+        return raw()
+    return session_relation(
+        spark, "winnow_raw", sf_dir, "documents", lambda: raw().localCheckpoint(eager=True)
+    )
 
 
 def cached_winnow_fingerprints(
@@ -3065,27 +2949,18 @@ def cached_winnow_fingerprints(
     dedup_tier_report both sit on the capped relation in their timed
     hot path, so it is checkpointed once rather than re-derived per
     call (measured 1.7 s -> 5.4 s at the x64 smoke tier without this
-    second checkpoint). Same staleness contract as every session
-    cache (documents file fingerprint)."""
-    fp0 = cached_winnow_raw(spark, sf_dir, checkpoint=checkpoint)
-    fdf = fp0.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    fp = fp0.join(fdf.filter(F.col("df") <= _WIN_MAX_DF).select("h"), "h")
+    second checkpoint)."""
+
+    def capped() -> DataFrame:
+        fp0 = cached_winnow_raw(spark, sf_dir, checkpoint=checkpoint)
+        fdf = fp0.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
+        return fp0.join(fdf.filter(F.col("df") <= _WIN_MAX_DF).select("h"), "h")
+
     if not checkpoint:
-        return fp
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp_tag = _table_fingerprint(sf_dir, "documents")
-    hit = _WINNOW_CAPPED_CACHE.get(key)
-    if hit is not None and hit[0] == fp_tag:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass
-        del _WINNOW_CAPPED_CACHE[key]
-    fp = fp.localCheckpoint(eager=True)
-    _WINNOW_CAPPED_CACHE[key] = (fp_tag, fp)
-    return fp
+        return capped()
+    return session_relation(
+        spark, "winnow_capped", sf_dir, "documents", lambda: capped().localCheckpoint(eager=True)
+    )
 
 
 @register(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 FEATURE_DIM = 8
 
@@ -651,33 +652,19 @@ WHERE bit_count(xor(x.band0, y.band0)) + bit_count(xor(x.band1, y.band1))
 """
 
 
-_PHASH_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def cached_phash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-image (doc_id, band0..band3) aHash relation,
-    materialized ONCE per (session, sf_dir) behind an eager
-    ``localCheckpoint`` — the decode+hash ``mapInPandas`` pass is the
-    dominant cost of the phash tier and referencing the lazy plan
-    from both sides of the LSH self-join (plus the two verify
-    probes) would re-decode every image up to 6x per run. Same
-    staleness contract as the MinHash cache: keyed on the documents
-    table's file fingerprint; superseded checkpoints are dropped and
-    best-effort unpersisted. At 100 TB the persisted analog is a
-    signature table refreshed with the image corpus."""
-    from rdbms_scala_spark.pipeline.dedup import _table_fingerprint
+    """The per-image (doc_id, band0..band3) aHash relation, a session
+    relation — the decode+hash ``mapInPandas`` pass is the dominant
+    cost of the phash tier and referencing the lazy plan from both
+    sides of the LSH self-join (plus the two verify probes) would
+    re-decode every image up to 6x per run. At 100 TB the persisted
+    analog is a signature table refreshed with the image corpus."""
+    return session_relation(
+        spark, "phash_bands", sf_dir, "documents", lambda: _phash_bands_build(spark, sf_dir)
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _PHASH_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _PHASH_CACHE[key]
+
+def _phash_bands_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 == 0)
     src = docs.select("doc_id")
     pkg_root = _PKG_ROOT
@@ -708,12 +695,10 @@ def cached_phash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    wide = src.mapInPandas(
+    return src.mapInPandas(
         hash_images,
         schema="doc_id long, band0 long, band1 long, band2 long, band3 long",
     ).localCheckpoint(eager=True)
-    _PHASH_CACHE[key] = (fp, wide)
-    return wide
 
 
 @register(

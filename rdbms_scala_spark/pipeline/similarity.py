@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 _N_QUERIES = 5  # first N vec_ids serve as the query set
 _TOP_K = 10
@@ -805,8 +806,6 @@ def embeddings_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # product quantization (PQ) — compressed-domain ANN, fully oracle-checked
 
-_PQ_CODES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 _PQ_M = 8  # subspaces
 _PQ_DSUB = 8  # dims per subspace (8 x 8 = the 64-dim corpus)
 _PQ_K = 16  # codes per subspace; codebook = subvectors of vec_id < 16
@@ -872,12 +871,11 @@ def pq_encode(spark: SparkSession, sf_dir: str):
     argmin aggregate against the broadcast codebook. ``lut`` is each
     query's per-(subspace, code) dot-product table (Q x M x K rows).
 
-    The codes ARE the persistent index: encoding runs once per
-    (application, corpus) and is memoized via an eager
-    localCheckpoint (at scale: written to parquet next to the corpus,
-    like the bucketed/z-order layouts); each query then pays only its
-    own LUT build plus the compressed scan — the read/write asymmetry
-    every ANN index exists to buy."""
+    The codes ARE the persistent index: a session relation keyed on
+    the embeddings table (at scale: written to parquet next to the
+    corpus, like the bucketed/z-order layouts); each query then pays
+    only its own LUT build plus the compressed scan — the read/write
+    asymmetry every ANN index exists to buy."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
@@ -893,17 +891,17 @@ def pq_encode(spark: SparkSession, sf_dir: str):
     d2 = F.expr(
         "aggregate(zip_with(vm, cm, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, e) -> acc + e)"
     )
-    memo_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    codes = _PQ_CODES_MEMO.get(memo_key)
-    if codes is None:
-        codes = (
+
+    def encode() -> DataFrame:
+        return (
             sub.join(F.broadcast(cb), F.col("m") == F.col("cm_m"))
             .select("vec_id", "m", "cent_id", d2.alias("d2"))
             .groupBy("vec_id", "m")
             .agg(F.min_by("cent_id", F.struct("d2", "cent_id")).alias("code"))
             .localCheckpoint(eager=True)
         )
-        _PQ_CODES_MEMO[memo_key] = codes
+
+    codes = session_relation(spark, "pq_codes", sf_dir, "embeddings", encode)
     dot = F.expr(
         "aggregate(zip_with(vm, cm, (x, y) -> x * y), CAST(0 AS BIGINT), (acc, e) -> acc + e)"
     )

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 
 def merge_upsert(
@@ -284,32 +285,29 @@ class SnapshotStore:
         }
 
 
-_TIME_TRAVEL_BUILT: set[tuple[str, str]] = set()
-
-
 def _demo_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     """The shared three-version demo store over `orders`: v0 = the
     base snapshot, v1 = v0 with the standard MERGE batch applied
     (every 10th key updated, five keys inserted), v2 = v1 with a
-    deterministic slice deleted (o_orderkey % 97 = 3). Built once per
-    (application, sf_dir); both the time-travel and the CDC-diff gate
-    queries read from it."""
+    deterministic slice deleted (o_orderkey % 97 = 3). A session
+    relation; both the time-travel and the CDC-diff gate queries read
+    from it."""
+    return session_relation(
+        spark, "snapshot_demo", sf_dir, "orders", lambda: _build_demo_store(spark, sf_dir)
+    )
+
+
+def _build_demo_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     from rdbms_scala_spark.sources.files import _scratch_dir
 
     import shutil
 
     root = _scratch_dir(spark, sf_dir, "snap_store")
+    # Wipe whatever a died or superseded build left: resuming would let
+    # commit() hand out shifted version numbers and silently change
+    # what read(0..2) means.
+    shutil.rmtree(root, ignore_errors=True)
     store = SnapshotStore(spark, root)
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key in _TIME_TRAVEL_BUILT:
-        return store
-    if store.versions():
-        # A previous build attempt died mid-way (memo not set but
-        # manifests exist): wipe and rebuild from scratch — resuming
-        # would let commit() hand out shifted version numbers and
-        # silently change what read(0..2) means.
-        shutil.rmtree(root, ignore_errors=True)
-        store = SnapshotStore(spark, root)
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("o_totalprice")
     )
@@ -336,7 +334,6 @@ def _demo_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     updates = modified.unionByName(inserted).localCheckpoint(eager=True)
     store.commit(merge_upsert(store.read(0), updates, keys=["o_orderkey"]))
     store.commit(store.read(1).filter(F.col("o_orderkey") % 97 != 3))
-    _TIME_TRAVEL_BUILT.add(key)
     return store
 
 
@@ -494,25 +491,25 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VACUUM_BUILT: set[tuple[str, str]] = set()
-
-
 def _vacuum_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     """A dedicated store for the vacuum demo (the shared
     `_demo_store` must KEEP all its versions — the time-travel and
     CDC queries read v0): commits the same v0/v1/v2 chain, plants an
     orphan data dir (simulating a crash between data write and
     manifest publish), then vacuums down to the last two versions.
-    Built+vacuumed once per (application, sf_dir)."""
+    A session relation."""
+    return session_relation(
+        spark, "snapshot_vacuum", sf_dir, "orders", lambda: _build_vacuum_store(spark, sf_dir)
+    )
+
+
+def _build_vacuum_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     import os
     import shutil
 
     from rdbms_scala_spark.sources.files import _scratch_dir
 
     root = _scratch_dir(spark, sf_dir, "snap_vacuum")
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    if key in _VACUUM_BUILT:
-        return SnapshotStore(spark, root)
     # Unconditional wipe: a stale dir from a died earlier attempt
     # would shift commit()'s version numbering.
     shutil.rmtree(root, ignore_errors=True)
@@ -528,7 +525,6 @@ def _vacuum_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
     # and no committer is live — the crash-recovery stance.
     result = store.vacuum(retain_last=2, orphan_retention_s=0.0)
     assert result["kept"] == [1, 2], result
-    _VACUUM_BUILT.add(key)
     return store
 
 

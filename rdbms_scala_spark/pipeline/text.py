@@ -22,6 +22,7 @@ from rdbms_scala_spark.pipeline.dedup import (
     tokens,
 )
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 _STOP_EN = ("the", "a", "and", "of", "is", "to", "in", "it")
 
@@ -2110,11 +2111,6 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("merge_round")
 
 
-_BPE_CACHE: dict[
-    tuple[str, str, int], tuple[str, list, DataFrame]
-] = {}
-
-
 def bpe_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
@@ -2127,26 +2123,19 @@ def bpe_train(
     simhash_candidate_pairs discipline). See `text_bpe_train_merges`
     for the algorithm and scale notes.
 
-    Materialized ONCE per (session, sf_dir, rounds) behind an eager
-    localCheckpoint with the `cached_jaccard_pairs` staleness
-    contract (documents file fingerprint): a session running BOTH
-    the trainer and the encoder pays the 5 driver-round training
-    loop once — exactly what a production tokenizer job does (train,
+    A session relation per round count: a session running BOTH the
+    trainer and the encoder pays the 5 driver-round training loop
+    once — exactly what a production tokenizer job does (train,
     persist the merge table, encode against it; never re-train per
     consumer)."""
-    from rdbms_scala_spark.pipeline.dedup import _table_fingerprint
+    return session_relation(
+        spark, "bpe", sf_dir, "documents", lambda: _bpe_train_build(spark, sf_dir), _BPE_ROUNDS
+    )
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"), _BPE_ROUNDS)
-    fp = _table_fingerprint(sf_dir, "documents")
-    hit = _BPE_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1], hit[2]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[2]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _BPE_CACHE[key]
+
+def _bpe_train_build(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(tokens()).alias("w"))
@@ -2199,9 +2188,7 @@ def bpe_train(
             F.trim(F.replace(merged, F.lit("  "), F.lit(" "))).alias("sym"),
             "n",
         )
-    types = cur.localCheckpoint(eager=True)
-    _BPE_CACHE[key] = (fp, rows, types)
-    return rows, types
+    return rows, cur.localCheckpoint(eager=True)
 
 
 @register(
@@ -2372,9 +2359,6 @@ _NB_PRED_CTE = f"""
 """
 
 
-_NB_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def nb_doc_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document NB prediction relation (doc_id, source, predicted,
     margin_q) — the SINGLE scoring derivation behind the confusion
@@ -2388,28 +2372,18 @@ def nb_doc_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets the cap value and lands in the top-confidence bin.
 
     Algorithm + scale shape: see `text_naive_bayes_source`. The
-    checkpoint here is one narrow row per document (4 columns) —
-    session-memoized so a session running the classifier and its two
+    checkpoint here is one narrow row per document (4 columns) — a
+    session relation, so a session running the classifier and its two
     evaluation readouts pays the scoring pipeline once, exactly as a
     production job would persist the scored relation once and derive
-    every eval table from it. Cache keyed on the documents-file
-    fingerprint so an overwritten table invalidates it."""
-    from rdbms_scala_spark.pipeline.dedup import _table_fingerprint
-
-    cache_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    table_fp = _table_fingerprint(sf_dir, "documents")
-    hit = _NB_CACHE.get(cache_key)
-    if hit is not None and hit[0] == table_fp:
-        return hit[1]
-    if hit is not None:
-        try:  # free the superseded checkpoint's blocks eagerly
-            hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-        except Exception:
-            pass  # ContextCleaner reclaims once the dict ref is gone
-        del _NB_CACHE[cache_key]
-    out = _nb_score_predictions(spark, sf_dir).localCheckpoint(eager=True)
-    _NB_CACHE[cache_key] = (table_fp, out)
-    return out
+    every eval table from it."""
+    return session_relation(
+        spark,
+        "nb_predictions",
+        sf_dir,
+        "documents",
+        lambda: _nb_score_predictions(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def _nb_score_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
+from rdbms_scala_spark.session import session_relation
 
 
 @register(
@@ -2398,9 +2399,6 @@ def _copurchase_cte() -> str:
     deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY u)"""
 
 
-_COPURCHASE_CACHE: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
 def copurchase_graph(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -2411,29 +2409,15 @@ def copurchase_graph(
     edges = both directions; deg = per-part degree. See
     `graph_link_prediction` for the scale argument.
 
-    The pair relation is materialized ONCE per (session, sf_dir)
-    behind an eager localCheckpoint with the `cached_jaccard_pairs`
-    staleness contract (lineitem file fingerprint): the derivation —
-    a lineitem DISTINCT, the co-order self-join + count, and the
-    two-distinct floor aggregate — is 3 passes over the fact table
-    and dwarfs the wedge stage both graph queries actually vary on,
-    so a session running the link-prediction family pays it once.
+    The pair relation is a session relation (keyed on lineitem): the
+    derivation — a lineitem DISTINCT, the co-order self-join + count,
+    and the two-distinct floor aggregate — is 3 passes over the fact
+    table and dwarfs the wedge stage both graph queries actually vary
+    on, so a session running the link-prediction family pays it once.
     edges/deg re-derive from the cached (support-floored, tiny) pair
     relation at negligible cost."""
-    from rdbms_scala_spark.pipeline.dedup import _table_fingerprint
 
-    key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    fp = _table_fingerprint(sf_dir, "lineitem")
-    hit = _COPURCHASE_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        pairs = hit[1]
-    else:
-        if hit is not None:
-            try:  # free the superseded checkpoint's blocks eagerly
-                hit[1]._jdf.queryExecution().toRdd().unpersist(False)
-            except Exception:
-                pass  # ContextCleaner reclaims once the dict ref is gone
-            del _COPURCHASE_CACHE[key]
+    def build() -> DataFrame:
         op = (
             load_table(spark, sf_dir, "lineitem")
             .select(
@@ -2452,7 +2436,7 @@ def copurchase_graph(
         )
         a = op.select("okey", F.col("pk").alias("pa"))
         b = op.select("okey", F.col("pk").alias("pb"))
-        pairs = (
+        return (
             a.join(b, "okey")
             .filter(F.col("pa") < F.col("pb"))
             .groupBy("pa", "pb")
@@ -2462,7 +2446,8 @@ def copurchase_graph(
             .select("pa", "pb")
             .localCheckpoint(eager=True)
         )
-        _COPURCHASE_CACHE[key] = (fp, pairs)
+
+    pairs = session_relation(spark, "copurchase_pairs", sf_dir, "lineitem", build)
     edges = pairs.select(F.col("pa").alias("u"), F.col("pb").alias("v")).unionAll(
         pairs.select(F.col("pb").alias("u"), F.col("pa").alias("v"))
     )

@@ -12,17 +12,35 @@ are made for a large cluster and merely *sized down* for local mode:
 - Arrow enabled for the Pandas-UDF paths (dedup/similarity/multimodal).
 - Session timezone pinned to UTC so date/timestamp semantics match the
   DuckDB oracle regardless of host timezone.
+- Driver memory defaults to half the host's RAM, at most 24g.
+
+The module also keeps the session's derived relations in one cache
+(``session_relation``, ``stats``, ``evict``), the single-session form
+of Spark SQL's CacheManager.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import time
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def _cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "*")
+
+
+def _driver_mem() -> str:
+    """Half the host's physical RAM, at most 24g: the driver shares the
+    host with its Python workers (and, in tests, DuckDB)."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(24 * 1024, phys // 2 // 2**20)}m"
 
 
 def get_spark(app_name: str = "rdbms_scala_spark", master: str | None = None) -> SparkSession:
@@ -92,7 +110,7 @@ def get_spark(app_name: str = "rdbms_scala_spark", master: str | None = None) ->
         # exercised). Keeping ANSI off avoids runtime errors on edge rows.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -123,61 +141,164 @@ def session_clone(spark: SparkSession, tag: str, confs: dict[str, str]) -> Spark
     return s2
 
 
-def evict_session_relations(spark: SparkSession) -> None:
-    """Drop every session-materialized relation: the module-level
-    localCheckpoint registries (jaccard pairs, doc shingles, minhash
-    sig/cand, winnowing raw + capped, phash bands) plus anything in
-    the SQL cache manager. The registries hold RDD checkpoint blocks
-    that ``spark.catalog.clearCache()`` does NOT free, so each entry
-    is unpersisted explicitly before the dict is cleared.
+_RELATIONS: dict[tuple, tuple[str, object]] = {}
+_COUNTS = {"hits": 0, "misses": 0, "build_s": 0.0}
+_LOCK = threading.Lock()  # guards _RELATIONS and _COUNTS, never a build
 
-    Used by bench.py between family blocks: round-over-round bench
-    comparisons showed rows timed late in a long session running
-    ~20% slower than isolated (accumulated checkpoint blocks raising
-    executor GC pressure — BASELINE.md's cache-residency note), so
-    the bench evicts after each family and lets the next family's
-    warm pass rebuild only what IT needs. Production jobs sharing a
-    long-lived session can call this at pipeline-stage boundaries for
-    the same reason."""
+
+def _table_fingerprint(sf_dir: str, *names: str) -> str:
+    """Cheap driver-side modification fingerprint of parquet tables:
+    (path, size, mtime_ns) of every data file under them, hashed.
+    Detects a table overwritten under the same path without reading
+    any data."""
+    import hashlib
+
+    parts: list[str] = []
+    for name in names:
+        root = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.isdir(root):
+            for dirpath, _dirs, files in os.walk(root):
+                for f in files:
+                    p = os.path.join(dirpath, f)
+                    st = os.stat(p)
+                    parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
+        elif os.path.exists(root):
+            st = os.stat(root)
+            parts.append(f"{root}|{st.st_size}|{st.st_mtime_ns}")
+    # os.walk's order is filesystem-dependent: sort so an identical
+    # on-disk table always fingerprints the same.
+    parts.sort()
+    return hashlib.md5("\n".join(parts).encode()).hexdigest()
+
+
+def _checkpoint_rdds(value: object):
+    """The JVM RDDs holding the blocks of each localCheckpoint DataFrame
+    in a cached value: the RDD its ``LogicalRDD`` scans.
+    (``queryExecution().toRdd()`` is a fresh map over that RDD, so
+    unpersisting it frees nothing.)"""
+    from py4j.protocol import Py4JError
     from pyspark.sql import DataFrame
 
-    from rdbms_scala_spark.pipeline import chunking, dedup, multimodal, text
-    from rdbms_scala_spark.queries import behavior
+    for item in value if isinstance(value, tuple) else (value,):
+        if isinstance(item, DataFrame):
+            try:
+                rdd = item._jdf.queryExecution().logical().rdd()
+            except Py4JError:
+                continue  # not a checkpoint: ContextCleaner reclaims it
+            yield rdd
 
-    registries = (
-        chunking._CDC_CACHE,
-        chunking._V0_FLAGS_CACHE,
-        dedup._PAIR_CACHE,
-        dedup._SHINGLE_CACHE,
-        dedup._MINHASH_CACHE,
-        dedup._WINNOW_CACHE,
-        dedup._WINNOW_CAPPED_CACHE,
-        dedup._SIMHASH_CACHE,
-        dedup._SUBSTR_COUNTS_CACHE,
-        multimodal._PHASH_CACHE,
-        text._BPE_CACHE,
-        text._NB_CACHE,
-        behavior._COPURCHASE_CACHE,
-    )
-    for reg in registries:
-        for val in reg.values():
-            items = val if isinstance(val, tuple) else (val,)
-            for item in items:
-                if isinstance(item, DataFrame):
-                    try:
-                        item._jdf.queryExecution().toRdd().unpersist(False)
-                    except Exception:
-                        pass  # ContextCleaner reclaims via the dict clear
-        reg.clear()
+
+def _unpersist(value: object) -> None:
+    from py4j.protocol import Py4JError
+
+    for rdd in _checkpoint_rdds(value):
+        try:
+            rdd.unpersist(False)
+        except Py4JError:
+            pass  # its application has stopped
+
+
+def session_relation(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    table: str | tuple[str, ...],
+    build: Callable[[], T],
+    *params: object,
+) -> T:
+    """The session's one cache of derived relations: return
+    ``build()``'s value for (application, ``kind``, ``sf_dir``,
+    ``params``), building it on the first call.
+
+    Values are what a session pays for once and reads many times: eager
+    ``localCheckpoint`` DataFrames, tuples holding them (MinHash
+    signatures + candidates, BPE merges + word types), or the names and
+    roots of on-disk layouts. A hit returns the identical object.
+
+    Staleness contract: an entry is valid only while the file
+    fingerprint (sizes + mtimes) of ``table`` under ``sf_dir`` is
+    unchanged. Overwriting the table under the same path rebuilds the
+    entry, and the superseded value's checkpoints are unpersisted
+    first. Whoever rewrites a table in place also calls
+    ``catalog.clear_table_memo()`` so the rebuild scans the new files.
+    Inserting an entry drops every entry of an earlier application (at
+    most one live application per process, as in ``session_clone``)."""
+    app = spark.sparkContext.applicationId
+    key = (app, kind, sf_dir.rstrip("/"), params)
+    fp = _table_fingerprint(sf_dir, *((table,) if isinstance(table, str) else table))
+    with _LOCK:
+        hit = _RELATIONS.get(key)
+        if hit is not None and hit[0] == fp:
+            _COUNTS["hits"] += 1
+            return hit[1]
+        _COUNTS["misses"] += 1
+        _RELATIONS.pop(key, None)
+    if hit is not None:
+        _unpersist(hit[1])
+    t0 = time.perf_counter()
+    value = build()
+    with _LOCK:
+        _COUNTS["build_s"] += time.perf_counter() - t0
+        stale = [_RELATIONS.pop(k)[1] for k in list(_RELATIONS) if k[0] != app]
+        _RELATIONS[key] = (fp, value)
+    for old in stale:
+        _unpersist(old)
+    return value
+
+
+def stats() -> dict:
+    """Counters of the session-relation cache: live entries and their
+    kinds, lookups served (``hits``) and built (``misses``), seconds
+    spent building, and the bytes the block manager holds for the
+    entries' checkpoints (read here, never on the lookup path)."""
+    from pyspark import SparkContext
+
+    with _LOCK:
+        entries, counts = dict(_RELATIONS), dict(_COUNTS)
+    ids = {rdd.id() for _fp, value in entries.values() for rdd in _checkpoint_rdds(value)}
+    sc = SparkContext._active_spark_context
+    cached = 0
+    if ids and sc is not None:
+        for info in sc._jsc.sc().getRDDStorageInfo():
+            if info.id() in ids:
+                cached += info.memSize() + info.diskSize()
+    return {
+        "entries": len(entries),
+        "kinds": sorted({k[1] for k in entries}),
+        **counts,
+        "cached_bytes": cached,
+    }
+
+
+def evict() -> None:
+    """Drop every entry of the session-relation cache, unpersisting
+    its checkpoints."""
+    with _LOCK:
+        values = [value for _fp, value in _RELATIONS.values()]
+        _RELATIONS.clear()
+    for value in values:
+        _unpersist(value)
+
+
+def evict_session_relations(spark: SparkSession) -> None:
+    """Drop every session-materialized relation: all entries of the
+    session-relation cache (see ``session_relation``) and everything
+    in the SQL cache manager, then nudge a JVM GC.
+
+    Long sessions call it at stage boundaries: bench.py between family
+    blocks, perfbench at the end of each corpus job. Checkpoint blocks
+    accumulated over a session raise executor GC pressure, and rows
+    timed late in a long session ran ~20% slower than in isolation
+    (BASELINE.md's cache-residency note). After eviction the next
+    stage rebuilds only what it reads."""
+    evict()
     spark.catalog.clearCache()
-    # Unpersisting and clearing only drops the REFERENCES; the JVM
-    # blocks (checkpoint RDDs, and crucially per-query BROADCAST
-    # variables — each two_phase_skew_join pass creates four) are
-    # reclaimed by ContextCleaner only when a JVM GC collects the
-    # driver-side stubs (default periodicGC is 30 min — never, for a
-    # bench). Nudge one explicitly so the next block is timed against
-    # a clean heap (round-12 bisect: skew-join broadcast residue
-    # inflated same-block join rows 15-100%).
+    # Dropping references does not free JVM blocks (per-query
+    # broadcast variables, e.g. four per two_phase_skew_join pass):
+    # ContextCleaner reclaims them only after a driver GC collects
+    # their stubs, and periodicGC defaults to 30 min. Nudge one so the
+    # next stage runs against a clean heap (round-12 bisect: broadcast
+    # residue inflated same-block join rows 15-100%).
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:

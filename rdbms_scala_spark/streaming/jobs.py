@@ -1193,12 +1193,13 @@ def streaming_throughput_progress(spark: SparkSession, sf_dir: str) -> DataFrame
                 # IS one micro-batch). A writer config such as
                 # spark.sql.files.maxRecordsPerFile can split a dir
                 # into several files — rare, so the fallback pays one
-                # extra job to re-concatenate that residue (ADVICE
-                # r15: don't crash with an opaque unpacking error).
+                # extra job to re-concatenate that residue, with the
+                # per-file record cap lifted so the session conf that
+                # split it cannot split it again.
                 d_one = os.path.join(workdir, f"one{i}")
                 spark.read.schema(schema).parquet(
                     os.path.join(base, f"r={i}")
-                ).coalesce(1).write.parquet(d_one)
+                ).coalesce(1).write.option("maxRecordsPerFile", 0).parquet(d_one)
                 hits = glob.glob(os.path.join(d_one, "part-*.parquet"))
             [part] = hits
             dst = os.path.join(input_dir, f"b{i}.parquet")

@@ -5,7 +5,10 @@ Runs entry() smoke plus every queries() entry whose name contains any
 given substring (all queries if none given), comparing against
 oracle_sql() through DuckDB at sf0.01.
 """
+import atexit
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, "/root/repo")
 
@@ -26,7 +29,16 @@ spark = (
     .getOrCreate()
 )
 
-con = duckdb.connect()
+# spill to a private temp dir removed at exit, not to ./.tmp
+spill = tempfile.mkdtemp(prefix="duckdb_spill_")
+con = duckdb.connect(config={"temp_directory": spill})
+
+
+@atexit.register
+def _close_duckdb() -> None:
+    con.close()
+    shutil.rmtree(spill, ignore_errors=True)
+
 for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
 

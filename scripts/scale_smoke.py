@@ -584,7 +584,7 @@ def main() -> None:
         "  shared span derivation plus a per-doc sum and should sit",
         "  at/below the span row. text_bpe_apply_encode and",
         "  text_bpe_train_merges share ONE session-cached training",
-        "  (_BPE_CACHE, built in the warm pass — the pagerank/minhash",
+        "  (the bpe session relation, built in the warm pass — the pagerank/minhash",
         "  note transposed to the tokenizer), so their rows measure",
         "  the encode join / merge-table assembly, not 5 re-trainings",
         "  each. graph_link_prediction/_adamic_adar: this tier",
@@ -619,7 +619,7 @@ def main() -> None:
         "  cheap empty hot-probe aggregate; the valve pays off on",
         "  corpora with true mega-boilerplate, which amplification",
         "  deliberately does not create. text_naive_bayes_source now",
-        "  shares its scored relation (_NB_CACHE) with the round-12",
+        "  shares its scored relation (a session relation) with the round-12",
         "  class-metrics/calibration readouts — built in the warm",
         "  pass, so the row measures scoring reads like the BPE pair.",
         "",

@@ -7,8 +7,11 @@ loop)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pytest
@@ -48,14 +51,33 @@ def sf_dir():
     return SF_DIR
 
 
+@contextlib.contextmanager
+def _duckdb_connection():
+    """A DuckDB connection that spills to its own temp dir, removed
+    when the connection closes. DuckDB's default spill dir is ./.tmp,
+    which a killed run leaves behind."""
+    spill = tempfile.mkdtemp(prefix="duckdb_spill_")
+    con = duckdb.connect(config={"temp_directory": spill})
+    try:
+        yield con
+    finally:
+        con.close()
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+@pytest.fixture
+def duckdb_con():
+    with _duckdb_connection() as con:
+        yield con
+
+
 @pytest.fixture(scope="session")
 def oracle():
     """DuckDB connection with each parquet table registered as a view,
     matching the driver's oracle environment."""
-    con = duckdb.connect()
-    for name in TABLES:
-        path = table_path(SF_DIR, name)
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-    yield con
-    con.close()
+    with _duckdb_connection() as con:
+        for name in TABLES:
+            path = table_path(SF_DIR, name)
+            if os.path.exists(path):
+                con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
+        yield con

@@ -131,7 +131,7 @@ def test_format_value_rendering():
     assert list(format_rows([Row(a=1, b="x"), Row(a=None, b="y")])) == ["1|x", "|y"]
 
 
-def test_reference_shipped_tpch_data_end_to_end(engine):
+def test_reference_shipped_tpch_data_end_to_end(engine, duckdb_con):
     """A reference user switches engines WITHOUT touching their data:
     the reference repo ships dbgen-format TPC-H files (~2k rows/table,
     pipe-delimited, including the full-width LINEITEM and a real
@@ -140,8 +140,6 @@ def test_reference_shipped_tpch_data_end_to_end(engine):
     reading the same files, so the parity claim is engine-vs-engine on
     the reference's own bytes."""
     import os
-
-    import duckdb
 
     ref = "/root/reference/data"
     if not os.path.isdir(ref):
@@ -166,7 +164,7 @@ def test_reference_shipped_tpch_data_end_to_end(engine):
         f"USING csv OPTIONS(path '{ref}/SUPPLIER.data', delimiter '|')"
     )
 
-    con = duckdb.connect()
+    con = duckdb_con
     con.execute(
         f"""CREATE VIEW L AS SELECT * FROM read_csv('{ref}/LINEITEM.data', delim='|', header=false,
         columns={{'l_orderkey':'INTEGER','l_partkey':'INTEGER','l_suppkey':'INTEGER',

@@ -10,8 +10,14 @@ oracle: they must agree with their exact companions.
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from rdbms_scala_spark import catalog, session
 from rdbms_scala_spark.pipeline import dedup, multimodal, similarity
 
 
@@ -1541,3 +1547,196 @@ def test_semdedup_margins_dominate_gemm_reorder(spark, sf_dir):
             assert g[3] is None, (vid, g, exp)
         else:
             assert g[3] is not None and abs(g[3] - exp[3]) < 1e-9, (vid, g, exp)
+
+
+# ---------------------------------------------------------------------------
+# the session-relation cache (session.session_relation)
+
+_SF_TINY = "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def sf_copy(tmp_path):
+    """A writable copy of the smallest tier, so tables can be rewritten
+    in place without touching the shared test data."""
+    d = tmp_path / "sf"
+    shutil.copytree(_SF_TINY, d, copy_function=shutil.copyfile)
+    return str(d)
+
+
+def _rewrite(sf_dir: str, name: str, fn) -> None:
+    """Overwrite ``name``'s parquet file in place with ``fn(table)`` and
+    drop the memoized scans, as an in-place rewriter must."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    pq.write_table(fn(pq.read_table(path)), path)
+    catalog.clear_table_memo()
+
+
+def _checkpoint_rdd_id(df) -> int:
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_session_relation_policy_without_spark(tmp_path):
+    """Hit identity, fingerprint invalidation, the per-lookup counters
+    and the drop of other applications' entries, on a stub session."""
+    from types import SimpleNamespace
+
+    def app(app_id):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    d = str(tmp_path)
+    path = tmp_path / "t.parquet"
+    path.write_bytes(b"v1")
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    s0 = session.stats()
+    a = session.session_relation(app("A"), "stub", d, "t", build, 1)
+    assert session.session_relation(app("A"), "stub", d + "/", "t", build, 1) is a
+    b = session.session_relation(app("A"), "stub", d, "t", build, 2)
+    assert b is not a  # params are part of the key
+    path.write_bytes(b"version 2")
+    c = session.session_relation(app("A"), "stub", d, "t", build, 1)
+    assert c is not a and len(builds) == 3
+    s1 = session.stats()
+    assert (s1["hits"] - s0["hits"], s1["misses"] - s0["misses"]) == (1, 3)
+    session.session_relation(app("B"), "stub", d, "t", build, 1)
+    assert not [k for k in session._RELATIONS if k[0] == "A"]
+    session.evict()
+    assert session.stats()["entries"] == 0
+
+
+def test_session_relation_counters_under_threads(tmp_path):
+    """Concurrent lookups lose no counter update and leave one entry
+    per key."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    stub = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="threads"))
+    (tmp_path / "t.parquet").write_bytes(b"v1")
+    n_threads, n_lookups = 16, 200
+
+    def worker(i):
+        for j in range(n_lookups):
+            session.session_relation(stub, "stress", str(tmp_path), "t", object, (i + j) % 4)
+
+    s0 = session.stats()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    s1 = session.stats()
+    lookups = (s1["hits"] - s0["hits"]) + (s1["misses"] - s0["misses"])
+    assert lookups == n_threads * n_lookups
+    assert s1["kinds"] == ["stress"] and s1["entries"] == 4
+    session.evict()
+
+
+def test_session_relation_hit_returns_same_object(spark, sf_copy):
+    first = dedup.cached_minhash_sig_cand(spark, sf_copy)
+    s0 = session.stats()
+    for _ in range(3):
+        assert dedup.cached_minhash_sig_cand(spark, sf_copy) is first
+    s1 = session.stats()
+    assert (s1["hits"] - s0["hits"], s1["misses"] - s0["misses"]) == (3, 0)
+    assert s1["cached_bytes"] > 0
+
+
+def test_session_relation_counters_add_up(spark, sf_copy):
+    """Every lookup is exactly one hit or one miss, and build time is
+    only spent on misses."""
+    s0 = session.stats()
+    for _ in range(2):
+        dedup.cached_minhash_sig_cand(spark, sf_copy)
+        dedup.cached_doc_shingles(spark, sf_copy)
+        dedup.cached_doc_shingles(spark, sf_copy, n=2)
+    s1 = session.stats()
+    hits, misses = s1["hits"] - s0["hits"], s1["misses"] - s0["misses"]
+    assert hits + misses == 6
+    assert (hits, misses) == (3, 3)
+    assert s1["build_s"] > s0["build_s"]
+    dedup.cached_doc_shingles(spark, sf_copy)
+    assert session.stats()["build_s"] == s1["build_s"]
+
+
+def test_rewritten_documents_rebuild_minhash_and_free_old_checkpoint(spark, sf_copy):
+    sig, cand = dedup.cached_minhash_sig_cand(spark, sf_copy)
+    n_docs = sig.count()
+    old_ids = {_checkpoint_rdd_id(sig), _checkpoint_rdd_id(cand)}
+    assert old_ids <= _persisted_rdd_ids(spark)
+
+    _rewrite(sf_copy, "documents", lambda t: t.slice(0, t.num_rows // 2))
+    sig2, cand2 = dedup.cached_minhash_sig_cand(spark, sf_copy)
+    assert sig2 is not sig and cand2 is not cand
+    assert 0 < sig2.count() < n_docs
+    assert not old_ids & _persisted_rdd_ids(spark)
+
+
+def test_rewritten_embeddings_give_fresh_pq_codes(spark, sf_copy):
+    codes, _ = similarity.pq_encode(spark, sf_copy)
+    before = sorted(codes.collect())
+
+    # reverse which vector each vec_id carries: the codebook (the
+    # vectors of vec_id < 16) and every code move with it
+    _rewrite(
+        sf_copy,
+        "embeddings",
+        lambda t: t.set_column(
+            t.schema.get_field_index("embedding"),
+            "embedding",
+            t.column("embedding").take(list(range(t.num_rows - 1, -1, -1))),
+        ),
+    )
+    codes2, _ = similarity.pq_encode(spark, sf_copy)
+    assert codes2 is not codes
+    fresh = sorted(codes2.collect())
+    assert fresh != before
+
+    session.evict_session_relations(spark)  # a from-scratch build agrees
+    assert sorted(similarity.pq_encode(spark, sf_copy)[0].collect()) == fresh
+
+
+def test_evict_session_relations_clears_every_kind(spark, sf_copy):
+    """Eviction reaches every session relation, including the PQ codes
+    and the on-disk builds (bucketed tables, schema-merge layout,
+    snapshot demo and vacuum stores) that the per-module registries
+    it used to list by hand never covered."""
+    from rdbms_scala_spark.pipeline import snapshot
+    from rdbms_scala_spark.sources import files
+
+    sig, cand = dedup.cached_minhash_sig_cand(spark, sf_copy)
+    similarity.pq_encode(spark, sf_copy)
+    files._bucketed_orders_lineitem(spark, sf_copy)
+    files._schema_evolution_layout(spark, sf_copy)
+    snapshot._vacuum_store(spark, sf_copy)  # builds the demo store too
+    kinds = set(session.stats()["kinds"])
+    assert {
+        "minhash_sig_cand",
+        "pq_codes",
+        "bucketed_orders_lineitem",
+        "schema_merge_layout",
+        "snapshot_demo",
+        "snapshot_vacuum",
+    } <= kinds
+
+    session.evict_session_relations(spark)
+    after = session.stats()
+    assert (after["entries"], after["kinds"], after["cached_bytes"]) == (0, [], 0)
+    assert not {_checkpoint_rdd_id(sig), _checkpoint_rdd_id(cand)} & _persisted_rdd_ids(spark)
+    # the next lookup rebuilds
+    assert dedup.cached_minhash_sig_cand(spark, sf_copy)[0] is not sig

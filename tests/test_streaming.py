@@ -5,6 +5,7 @@ equivalence)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
@@ -364,12 +365,15 @@ def test_python_stream_source_resumes_from_checkpoint(spark, tmp_path):
     assert drain() == (100, 100)
 
 
-def test_throughput_progress_ledger_is_exactly_once(spark):
+@pytest.mark.parametrize("max_records_per_file", [None, 50])
+def test_throughput_progress_ledger_is_exactly_once(spark, max_records_per_file):
     """The progress ledger must account for every source row exactly
     once at a DIFFERENT sf than the driver gate exercises: 4 non-empty
     batches (one per mod-4 file), sum(input_rows) == the events table,
     per-batch output == the purchase count of that batch's residue
-    class, cumulative input telescopes."""
+    class, cumulative input telescopes. A small
+    ``spark.sql.files.maxRecordsPerFile`` splits every residue into
+    several files, so the second case runs the one-file fallback."""
     from rdbms_scala_spark.catalog import load_table
     from rdbms_scala_spark.streaming.jobs import (
         _THROUGHPUT_BATCHES,
@@ -377,7 +381,14 @@ def test_throughput_progress_ledger_is_exactly_once(spark):
     )
 
     sf = "/root/testdata/sf0.001"
-    rows = streaming_throughput_progress(spark, sf).collect()
+    conf = "spark.sql.files.maxRecordsPerFile"
+    saved = spark.conf.get(conf)
+    try:
+        if max_records_per_file is not None:
+            spark.conf.set(conf, str(max_records_per_file))
+        rows = streaming_throughput_progress(spark, sf).collect()
+    finally:
+        spark.conf.set(conf, saved)
     ev = load_table(spark, sf, "events")
     total = ev.count()
     assert len(rows) == _THROUGHPUT_BATCHES
