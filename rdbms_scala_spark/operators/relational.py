@@ -66,9 +66,7 @@ def scan_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem filter from the join key by constant propagation, but
     this query does not rely on that), so each side reads only the
     row groups whose min/max straddle the key — the layout-level hash
-    probe. Benchmarked per-round (bench.py
-    EXTENSION) so the point-lookup LATENCY story is tracked, not just
-    correctness; on a bucketed/sorted layout (write_bucketed_table /
+    probe. On a bucketed/sorted layout (write_bucketed_table /
     write_sorted_table) the same plan touches exactly one
     bucket/file."""
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") == 42)

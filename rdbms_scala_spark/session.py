@@ -285,11 +285,11 @@ def evict_session_relations(spark: SparkSession) -> None:
     session-relation cache (see ``session_relation``) and everything
     in the SQL cache manager, then nudge a JVM GC.
 
-    Long sessions call it at stage boundaries: bench.py between family
-    blocks, perfbench at the end of each corpus job. Checkpoint blocks
-    accumulated over a session raise executor GC pressure, and rows
-    timed late in a long session ran ~20% slower than in isolation
-    (BASELINE.md's cache-residency note). After eviction the next
+    Long sessions call it at stage boundaries, e.g. perfbench at the
+    end of each corpus job. Checkpoint blocks accumulated over a
+    session raise executor GC pressure, and rows timed late in a long
+    session ran ~20% slower than in isolation (BASELINE.md's
+    cache-residency note). After eviction the next
     stage rebuilds only what it reads."""
     evict()
     spark.catalog.clearCache()

@@ -1093,9 +1093,8 @@ def streaming_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline monitors (rows/s, batch duration, backpressure); before a
 # dashboard alarms on those numbers, the ACCOUNTING underneath them
 # (numInputRows per batch, sink numOutputRows, their sum vs the
-# source) must be exact. The rates themselves are wall-clock-shaped
-# and live in this query's bench row; the row accounting is
-# deterministic and oracle-checked here.
+# source) must be exact. The rates themselves are wall-clock-shaped;
+# the row accounting is deterministic and oracle-checked here.
 
 _THROUGHPUT_BATCHES = 4
 
@@ -1131,10 +1130,8 @@ def streaming_throughput_progress(spark: SparkSession, sf_dir: str) -> DataFrame
 
     This is the trust anchor for the throughput numbers a pipeline
     actually alarms on: inputRowsPerSecond / durationMs ride the SAME
-    progress objects but are wall-clock-shaped, so they are tracked as
-    this query's per-round bench row (a known row count drained
-    end-to-end — the streaming family's performance readout) while the
-    deterministic row accounting is what the oracle certifies.
+    progress objects but are wall-clock-shaped, so the deterministic
+    row accounting is what the oracle certifies.
 
     Scale shape: the split is one partitioned pass of the source (the
     stand-in for a real arrival order); the drain is map-only — no
