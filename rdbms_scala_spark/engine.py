@@ -84,12 +84,10 @@ class Engine:
         df = self.spark.sql(text)
         return df if _is_query(df) else None
 
-    def register_parquet(self, name: str, path: str, cache: bool = False) -> DataFrame:
+    def register_parquet(self, name: str, path: str) -> DataFrame:
         """Register a Parquet file/dir as a queryable table — the
         modern equivalent of the reference's CREATE TABLE load path."""
         df = self.spark.read.parquet(path)
-        if cache:
-            df = df.cache()
         df.createOrReplaceTempView(name)
         return df
 

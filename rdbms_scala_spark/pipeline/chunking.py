@@ -750,7 +750,7 @@ def _decontam_cdc_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return snapshot_diff(docs, v1, keys=["doc_id"]).localCheckpoint(eager=True)
+    return snapshot_diff(docs, v1, keys=["doc_id"])
 
 
 def _decontam_bench_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -803,9 +803,7 @@ def _v0_standing_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         train0 = contamination_shingles(spark, sf_dir).filter(
             F.col("doc_id") % 29 != 0
         )
-        return _contam_flags(
-            _decontam_bench_shingles(spark, sf_dir), train0
-        ).localCheckpoint(eager=True)
+        return _contam_flags(_decontam_bench_shingles(spark, sf_dir), train0)
 
     return session_relation(spark, "v0_standing_flags", sf_dir, "documents", build)
 

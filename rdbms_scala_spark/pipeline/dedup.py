@@ -34,7 +34,7 @@ from pyspark.sql.window import Window as W
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
-from rdbms_scala_spark.session import session_relation
+from rdbms_scala_spark.session import materialize, session_relation
 
 # ---------------------------------------------------------------------------
 # shared building blocks
@@ -398,10 +398,8 @@ def cached_jaccard_pairs(
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        return (
-            pairwise_jaccard(shingles_df(docs, n=3), max_df=max_df)
-            .filter(F.col("jaccard") >= 0.7)
-            .localCheckpoint(eager=True)
+        return pairwise_jaccard(shingles_df(docs, n=3), max_df=max_df).filter(
+            F.col("jaccard") >= 0.7
         )
 
     return session_relation(spark, "jaccard_pairs", sf_dir, "documents", build, max_df)
@@ -418,7 +416,7 @@ def cached_doc_shingles(
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        return shingles_df(docs, n=n, distinct=True).localCheckpoint(eager=True)
+        return shingles_df(docs, n=n, distinct=True)
 
     return session_relation(spark, "doc_shingles", sf_dir, "documents", build, n)
 
@@ -506,9 +504,9 @@ def cached_minhash_sig_cand(
 
     def build() -> tuple[DataFrame, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
-        sig = minhash_signatures(
-            shingles_df(docs, n=3, distinct=False)
-        ).localCheckpoint(eager=True)
+        # cand derives from sig: without materializing sig first the
+        # signature pass would run twice
+        sig = materialize(minhash_signatures(shingles_df(docs, n=3, distinct=False)))
         cand = (
             expand_bucket_pairs(
                 minhash_band_buckets(sig),
@@ -518,7 +516,6 @@ def cached_minhash_sig_cand(
             )
             .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         return sig, cand
 
@@ -877,15 +874,10 @@ def _simhash_cand_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    out = (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.expr("fla ^ flb")) + F.bit_count(F.expr("fha ^ fhb")),
-        )
-        .select("doc_a", "doc_b", "hamming")
-        .localCheckpoint(eager=True)
-    )
-    return out
+    return cand.withColumn(
+        "hamming",
+        F.bit_count(F.expr("fla ^ flb")) + F.bit_count(F.expr("fha ^ fhb")),
+    ).select("doc_a", "doc_b", "hamming")
 
 
 @register(
@@ -2420,7 +2412,6 @@ def _substring_dup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("h")
             .agg(F.count(F.lit(1)).alias("n"))
             .filter(F.col("n") >= 2)
-            .localCheckpoint(eager=True)
         )
 
     return session_relation(spark, "substring_dup_counts", sf_dir, "documents", build)
@@ -2916,51 +2907,38 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     )
 
 
-def cached_winnow_raw(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def cached_winnow_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UNCAPPED winnowing fingerprint relation (doc_id, h), a
     session relation — the session stand-in for the PERSISTED
     fingerprint store a production corpus keeps next to the data:
     gram hashing + the per-window min dominate the tier's cost, and
     every consumer (pair join, tier report, incremental probe)
-    derives from this one relation with its own df-cap stance.
-    ``checkpoint=False`` returns the raw lineage without
-    materializing or caching — the plan-pin tests inspect the
-    derivation through it."""
-
-    def raw() -> DataFrame:
-        return winnow_fingerprints(load_table(spark, sf_dir, "documents"))
-
-    if not checkpoint:  # raw-lineage callers must not see the cache
-        return raw()
+    derives from this one relation with its own df-cap stance."""
     return session_relation(
-        spark, "winnow_raw", sf_dir, "documents", lambda: raw().localCheckpoint(eager=True)
+        spark,
+        "winnow_raw",
+        sf_dir,
+        "documents",
+        lambda: winnow_fingerprints(load_table(spark, sf_dir, "documents")),
     )
 
 
-def cached_winnow_fingerprints(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
+def cached_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped winnowing fingerprint relation (doc_id, h),
     derived from the raw store (cached_winnow_raw pays the expensive
-    gram + window-min stages) and itself session-materialized: the
+    gram + window-min stages) and itself a session relation: the
     cap groupBy + join is cheap but dedup_winnowing_pairs and
     dedup_tier_report both sit on the capped relation in their timed
-    hot path, so it is checkpointed once rather than re-derived per
+    hot path, so it is materialized once rather than re-derived per
     call (measured 1.7 s -> 5.4 s at the x64 smoke tier without this
     second checkpoint)."""
 
     def capped() -> DataFrame:
-        fp0 = cached_winnow_raw(spark, sf_dir, checkpoint=checkpoint)
+        fp0 = cached_winnow_raw(spark, sf_dir)
         fdf = fp0.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
         return fp0.join(fdf.filter(F.col("df") <= _WIN_MAX_DF).select("h"), "h")
 
-    if not checkpoint:
-        return capped()
-    return session_relation(
-        spark, "winnow_capped", sf_dir, "documents", lambda: capped().localCheckpoint(eager=True)
-    )
+    return session_relation(spark, "winnow_capped", sf_dir, "documents", capped)
 
 
 @register(

@@ -698,7 +698,7 @@ def _phash_bands_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     return src.mapInPandas(
         hash_images,
         schema="doc_id long, band0 long, band1 long, band2 long, band3 long",
-    ).localCheckpoint(eager=True)
+    )
 
 
 @register(

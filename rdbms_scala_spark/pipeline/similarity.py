@@ -898,7 +898,6 @@ def pq_encode(spark: SparkSession, sf_dir: str):
             .select("vec_id", "m", "cent_id", d2.alias("d2"))
             .groupBy("vec_id", "m")
             .agg(F.min_by("cent_id", F.struct("d2", "cent_id")).alias("code"))
-            .localCheckpoint(eager=True)
         )
 
     codes = session_relation(spark, "pq_codes", sf_dir, "embeddings", encode)

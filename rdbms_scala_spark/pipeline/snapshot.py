@@ -29,7 +29,6 @@ def merge_upsert(
     base: DataFrame,
     updates: DataFrame,
     keys: list[str],
-    broadcast_updates: bool = True,
     validate_unique: bool = False,
 ) -> DataFrame:
     """MERGE semantics over DataFrames: every ``updates`` row wins over
@@ -39,9 +38,9 @@ def merge_upsert(
 
     Spark-first shape: ``base LEFT ANTI JOIN updates ON keys`` keeps
     the survivors, then ``UNION ALL updates`` — ONE pass over the base
-    table. With ``broadcast_updates`` (the common case: update batches
-    are orders of magnitude smaller than the snapshot) the anti-join
-    is map-only, so the whole merge is shuffle-free over the base. At
+    table. The batch is broadcast (update batches are orders of
+    magnitude smaller than the snapshot), so the anti-join is
+    map-only and the whole merge is shuffle-free over the base. At
     100 TB, land the result with dynamic partition overwrite
     (``spark.sql.sources.partitionOverwriteMode=dynamic`` +
     ``write_parquet(partition_by=...)``): only partitions containing a
@@ -81,8 +80,7 @@ def merge_upsert(
                 f"{dict((k, dup[0][k]) for k in keys)}; MERGE requires a "
                 "unique source key — dedupe the batch first"
             )
-    upd = F.broadcast(updates) if broadcast_updates else updates
-    return base.join(upd, keys, "left_anti").unionByName(updates)
+    return base.join(F.broadcast(updates), keys, "left_anti").unionByName(updates)
 
 
 @register(
@@ -121,6 +119,15 @@ def pipeline_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("o_totalprice")
     )
+    return merge_upsert(
+        orders, _standard_merge_batch(spark, sf_dir), keys=["o_orderkey"], validate_unique=True
+    )
+
+
+def _standard_merge_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The standard MERGE batch over `orders` (see
+    pipeline_upsert_snapshot): every 10th key updated, five keys
+    inserted."""
     modified = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 10 == 0)
@@ -146,10 +153,9 @@ def pipeline_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference and the plan scans orders 5x. localCheckpoint (eager)
     # collapses the batch to a materialized RDD so the merge plan
     # scans orders exactly once — and unlike .cache() the blocks are
-    # GC-released, so repeated bench invocations don't accumulate
+    # GC-released, so repeated invocations don't accumulate
     # CacheManager state.
-    updates = modified.unionByName(inserted).localCheckpoint(eager=True)
-    return merge_upsert(orders, updates, keys=["o_orderkey"], validate_unique=True)
+    return modified.unionByName(inserted).localCheckpoint(eager=True)
 
 
 class SnapshotStore:
@@ -163,14 +169,13 @@ class SnapshotStore:
     its manifest only (never by listing data dirs, which can contain
     half-written files), and the manifest publish is an EXCLUSIVE
     atomic link of the fully-written temp file — a reader sees either
-    the complete version or nothing, and of two racing committers for
-    the same version exactly one wins (the loser gets
-    ``FileExistsError`` and retries with a fresh version — optimistic
-    concurrency, not last-writer-wins). At 100 TB the same design
-    holds with the manifest on an atomic-create store (HDFS) or a
-    conditional-put (If-None-Match) object store; data writes stay
-    fully distributed, only the manifest touch is driver-side and
-    O(1)."""
+    the complete version or nothing. Two racing committers never share
+    a version: each claims its data dir exclusively before writing
+    (optimistic concurrency, not last-writer-wins). At 100 TB the same
+    design holds with the dir claim and the manifest on an
+    atomic-create store (HDFS) or a conditional-put (If-None-Match)
+    object store; data writes stay fully distributed, only the claim
+    and the manifest touch are driver-side and O(1)."""
 
     def __init__(self, spark: SparkSession, root: str) -> None:
         import os
@@ -191,22 +196,31 @@ class SnapshotStore:
 
     def commit(self, df: DataFrame) -> int:
         """Write ``df`` as the next version; returns the version id.
-        The data write lands fully before the manifest publish makes
-        it visible — a crash in between leaves an orphan data dir (to
-        be vacuumed), never a readable half-version. Publish is an
-        exclusive ``os.link`` of the fully-written temp manifest, so
-        two racing committers that both allocated version N cannot
-        silently clobber each other (rename would): the loser gets
-        ``FileExistsError`` and must retry with a fresh version —
-        the optimistic-concurrency kernel of Delta's commit
+        The committer first claims the data dir ``v{N}`` with an
+        exclusive ``mkdir`` (taking N+1 when another committer, or a
+        crash orphan, holds N), so no two commits ever write into the
+        same dir. The data write lands fully in the claimed dir before
+        the manifest publish makes it visible — a crash in between
+        leaves an orphan data dir (to be vacuumed), never a readable
+        half-version. Publish is an exclusive ``os.link`` of the
+        fully-written temp manifest, so a version is never published
+        twice — the optimistic-concurrency kernel of Delta's commit
         protocol."""
         import json
         import os
 
         vs = self.versions()
         v = (vs[-1] + 1) if vs else 0
-        data_dir = os.path.join(self.root, f"v{v}")
-        df.write.mode("overwrite").parquet(data_dir)
+        while True:
+            data_dir = os.path.join(self.root, f"v{v}")
+            try:
+                os.mkdir(data_dir)
+                break
+            except FileExistsError:
+                v += 1
+        # append: the dir is ours and empty; overwrite would delete
+        # and recreate it, reopening the claim
+        df.write.mode("append").parquet(data_dir)
         tmp = os.path.join(self.manifest_dir, f".{v}.json.tmp")
         with open(tmp, "w") as fh:
             json.dump({"version": v, "path": data_dir}, fh)
@@ -312,27 +326,9 @@ def _build_demo_store(spark: SparkSession, sf_dir: str) -> SnapshotStore:
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("o_totalprice")
     )
     store.commit(base)
-    modified = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % 10 == 0)
-        .select(
-            "o_orderkey",
-            F.lit("U").alias("o_orderstatus"),
-            F.round(F.col("o_totalprice") + 1000.0, 2).alias("o_totalprice"),
-        )
+    store.commit(
+        merge_upsert(store.read(0), _standard_merge_batch(spark, sf_dir), keys=["o_orderkey"])
     )
-    inserted = (
-        load_table(spark, sf_dir, "orders")
-        .agg(F.max("o_orderkey").alias("mk"))
-        .select(F.explode(F.sequence(F.col("mk") + 1, F.col("mk") + 5)).alias("o_orderkey"))
-        .select(
-            "o_orderkey",
-            F.lit("N").alias("o_orderstatus"),
-            F.lit(100.0).alias("o_totalprice"),
-        )
-    )
-    updates = modified.unionByName(inserted).localCheckpoint(eager=True)
-    store.commit(merge_upsert(store.read(0), updates, keys=["o_orderkey"]))
     store.commit(store.read(1).filter(F.col("o_orderkey") % 97 != 3))
     return store
 

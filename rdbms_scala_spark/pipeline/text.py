@@ -2188,7 +2188,7 @@ def _bpe_train_build(
             F.trim(F.replace(merged, F.lit("  "), F.lit(" "))).alias("sym"),
             "n",
         )
-    return rows, cur.localCheckpoint(eager=True)
+    return rows, cur
 
 
 @register(
@@ -2372,17 +2372,13 @@ def nb_doc_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets the cap value and lands in the top-confidence bin.
 
     Algorithm + scale shape: see `text_naive_bayes_source`. The
-    checkpoint here is one narrow row per document (4 columns) — a
+    cached relation is one narrow row per document (4 columns) — a
     session relation, so a session running the classifier and its two
     evaluation readouts pays the scoring pipeline once, exactly as a
     production job would persist the scored relation once and derive
     every eval table from it."""
     return session_relation(
-        spark,
-        "nb_predictions",
-        sf_dir,
-        "documents",
-        lambda: _nb_score_predictions(spark, sf_dir).localCheckpoint(eager=True),
+        spark, "nb_predictions", sf_dir, "documents", lambda: _nb_score_predictions(spark, sf_dir)
     )
 
 

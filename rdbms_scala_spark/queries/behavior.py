@@ -2444,7 +2444,6 @@ def copurchase_graph(
             .crossJoin(F.broadcast(sup))
             .filter(F.col("n_both") >= F.col("floor_n"))
             .select("pa", "pb")
-            .localCheckpoint(eager=True)
         )
 
     pairs = session_relation(spark, "copurchase_pairs", sf_dir, "lineitem", build)

@@ -16,7 +16,9 @@ are made for a large cluster and merely *sized down* for local mode:
 
 The module also keeps the session's derived relations in one cache
 (``session_relation``, ``stats``, ``evict``), the single-session form
-of Spark SQL's CacheManager.
+of Spark SQL's CacheManager. Builders hand the cache lazy plans; the
+cache decides how they are materialized (``materialize``) and when
+they are rebuilt or dropped.
 """
 
 from __future__ import annotations
@@ -52,10 +54,7 @@ def get_spark(app_name: str = "rdbms_scala_spark", master: str | None = None) ->
     cluster-appropriate as-is.
     """
     cpus = _cpus()
-    shuffle_parts = os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-        str(os.cpu_count() or 32) if cpus == "*" else cpus,
-    )
+    shuffle_parts = str(os.cpu_count() or 32) if cpus == "*" else cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -82,13 +81,8 @@ def get_spark(app_name: str = "rdbms_scala_spark", master: str | None = None) ->
         # md5 pass ran 2.1 s on 3 of 32 cores). 512 KB reflects
         # NVMe/page-cache open latency; at 100 TB splits are
         # maxPartitionBytes-bound and this knob is inert — it only
-        # governs how far a SMALL input fans out. Env-overridable for
-        # cluster profiles where file-open is genuinely expensive
-        # (cold object stores with many small files).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "524288"),
-        )
+        # governs how far a SMALL input fans out.
+        .config("spark.sql.files.openCostInBytes", "524288")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # Parquet TIMESTAMP(NANOS) (events.ts) is otherwise rejected;
@@ -171,21 +165,49 @@ def _table_fingerprint(sf_dir: str, *names: str) -> str:
     return hashlib.md5("\n".join(parts).encode()).hexdigest()
 
 
-def _checkpoint_rdds(value: object):
-    """The JVM RDDs holding the blocks of each localCheckpoint DataFrame
-    in a cached value: the RDD its ``LogicalRDD`` scans.
-    (``queryExecution().toRdd()`` is a fresh map over that RDD, so
-    unpersisting it frees nothing.)"""
+def _checkpoint_rdd(df):
+    """The JVM RDD holding a localCheckpoint DataFrame's blocks (the
+    RDD its ``LogicalRDD`` scans), or None when ``df`` is not a
+    materialized checkpoint. (``queryExecution().toRdd()`` is a fresh
+    map over that RDD, so unpersisting it frees nothing.)"""
     from py4j.protocol import Py4JError
+
+    try:
+        rdd = df._jdf.queryExecution().logical().rdd()
+        return rdd if rdd.isCheckpointed() else None
+    except Py4JError:
+        return None  # a lazy plan: ContextCleaner reclaims it
+
+
+def _checkpoint_rdds(value: object):
+    """The checkpoint RDDs of the DataFrames in a cached value."""
     from pyspark.sql import DataFrame
 
     for item in value if isinstance(value, tuple) else (value,):
         if isinstance(item, DataFrame):
-            try:
-                rdd = item._jdf.queryExecution().logical().rdd()
-            except Py4JError:
-                continue  # not a checkpoint: ContextCleaner reclaims it
-            yield rdd
+            rdd = _checkpoint_rdd(item)
+            if rdd is not None:
+                yield rdd
+
+
+def materialize(value: T) -> T:
+    """The session's materialization policy: every DataFrame in
+    ``value`` (one value or a tuple of them) that is not already a
+    checkpoint becomes an eager ``localCheckpoint``; anything else
+    passes through. ``session_relation`` applies it to every value it
+    stores, so builders return lazy plans. A builder calls it itself
+    only for an intermediate that a second returned relation derives
+    from, which would otherwise be computed twice."""
+    from pyspark.sql import DataFrame
+
+    def one(item):
+        if isinstance(item, DataFrame) and _checkpoint_rdd(item) is None:
+            return item.localCheckpoint(eager=True)
+        return item
+
+    if isinstance(value, tuple):
+        return tuple(one(item) for item in value)
+    return one(value)
 
 
 def _unpersist(value: object) -> None:
@@ -210,10 +232,14 @@ def session_relation(
     ``build()``'s value for (application, ``kind``, ``sf_dir``,
     ``params``), building it on the first call.
 
-    Values are what a session pays for once and reads many times: eager
-    ``localCheckpoint`` DataFrames, tuples holding them (MinHash
-    signatures + candidates, BPE merges + word types), or the names and
-    roots of on-disk layouts. A hit returns the identical object.
+    Values are what a session pays for once and reads many times:
+    DataFrames, tuples holding them (MinHash signatures + candidates,
+    BPE merges + word types), or the names and roots of on-disk
+    layouts. ``build`` returns lazy plans and the cache materializes
+    them: on a miss every DataFrame in the value that is not already a
+    checkpoint is replaced by its eager ``localCheckpoint``
+    (``materialize``) before it is stored. A hit returns the identical
+    object.
 
     Staleness contract: an entry is valid only while the file
     fingerprint (sizes + mtimes) of ``table`` under ``sf_dir`` is
@@ -236,7 +262,7 @@ def session_relation(
     if hit is not None:
         _unpersist(hit[1])
     t0 = time.perf_counter()
-    value = build()
+    value = materialize(build())
     with _LOCK:
         _COUNTS["build_s"] += time.perf_counter() - t0
         stale = [_RELATIONS.pop(k)[1] for k in list(_RELATIONS) if k[0] != app]

@@ -585,8 +585,8 @@ def test_purge_oversized_buckets_dataframe_cap(spark):
 
 def test_merge_upsert_row_fates_and_broadcast(spark):
     """merge_upsert must produce exactly the three row fates (replaced,
-    inserted, passed-through) and, with broadcast_updates, keep the
-    anti-join broadcast so the base table is never shuffled."""
+    inserted, passed-through) and keep the anti-join broadcast so the
+    base table is never shuffled."""
     from rdbms_scala_spark.pipeline.snapshot import merge_upsert
 
     base = spark.createDataFrame(
@@ -617,13 +617,6 @@ def test_merge_upsert_row_fates_and_broadcast(spark):
         .toString()
     )
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan[:1500]
-    no_hint = (
-        merge_upsert(base, updates, keys=["k"], broadcast_updates=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert not re.search(r"BroadcastHashJoin .*LeftAnti", no_hint)
 
 
 def test_snapshot_store_time_travel_and_atomic_manifest(spark, tmp_path):
@@ -915,6 +908,22 @@ def test_snapshot_commit_race_loses_loudly(spark, tmp_path):
             os.unlink(tmp)
     # winner's manifest untouched: v1 still reads a's 5-row commit
     assert a.read(1).count() == 5
+
+
+def test_snapshot_commit_from_stale_version_keeps_winner_data(spark, tmp_path):
+    """Two real commits from the same stale version allocation: the
+    second committer must land on a fresh version and leave the
+    first commit's rows intact."""
+    from rdbms_scala_spark.pipeline.snapshot import SnapshotStore
+
+    a = SnapshotStore(spark, str(tmp_path / "store"))
+    b = SnapshotStore(spark, str(tmp_path / "store"))
+    b.versions = lambda: []  # b listed the manifests before a published
+    va = a.commit(spark.range(5).withColumnRenamed("id", "k"))
+    vb = b.commit(spark.range(100, 103).withColumnRenamed("id", "k"))
+    assert (va, vb) == (0, 1)
+    assert sorted(r.k for r in a.read(va).collect()) == [0, 1, 2, 3, 4]
+    assert sorted(r.k for r in a.read(vb).collect()) == [100, 101, 102]
 
 
 def test_snapshot_vacuum_retention_protects_fresh_orphans(spark, tmp_path):
@@ -1740,3 +1749,34 @@ def test_evict_session_relations_clears_every_kind(spark, sf_copy):
     assert not {_checkpoint_rdd_id(sig), _checkpoint_rdd_id(cand)} & _persisted_rdd_ids(spark)
     # the next lookup rebuilds
     assert dedup.cached_minhash_sig_cand(spark, sf_copy)[0] is not sig
+
+
+def test_session_relation_materializes_lazy_builds(spark, sf_copy):
+    """A build hands back a lazy plan; the cache stores it as an eager
+    checkpoint whose blocks the block manager holds."""
+    df = session.session_relation(spark, "lazy_range", sf_copy, "documents", lambda: spark.range(7))
+    assert _checkpoint_rdd_id(df) in _persisted_rdd_ids(spark)
+    assert df.count() == 7
+    session.evict()
+
+
+def test_rewritten_events_rebuild_partitioned_layout(spark, sf_copy):
+    """The date-partitioned events layout is a session relation keyed
+    on `events`: rewriting `events` rewrites the layout, so the pruned
+    scan counts the new rows."""
+    from rdbms_scala_spark.sources import files
+
+    window = (F.col("ts") >= F.lit("2024-01-10").cast("timestamp")) & (
+        F.col("ts") < F.lit("2024-01-17").cast("timestamp")
+    )
+
+    def pruned_vs_direct():
+        got = sum(r.n_events for r in files.scan_partition_pruned(spark, sf_copy).collect())
+        return got, catalog.load_table(spark, sf_copy, "events").filter(window).count()
+
+    got, want = pruned_vs_direct()
+    assert got == want > 0
+    assert "events_partitioned" in session.stats()["kinds"]
+    _rewrite(sf_copy, "events", lambda t: t.slice(0, t.num_rows // 2))
+    got2, want2 = pruned_vs_direct()
+    assert got2 == want2 < want

@@ -586,17 +586,16 @@ def test_cosine_histogram_no_cartesian(spark, sf_dir):
 
 
 def test_winnowing_window_is_doc_partitioned(spark, sf_dir):
-    """The winnowing fingerprint DERIVATION (inspected pre-checkpoint
-    via cached_winnow_fingerprints(checkpoint=False)) must partition
-    its window-min by doc_id — never an empty-partition global
-    window; the full query must aggregate the pair join with a
+    """The winnowing fingerprint DERIVATION (the lazy
+    winnow_fingerprints plan the session cache materializes) must
+    partition its window-min by doc_id — never an empty-partition
+    global window; the full query must aggregate the pair join with a
     partial count below the shuffle and stay cartesian-free."""
-    from rdbms_scala_spark.pipeline.dedup import cached_winnow_fingerprints
+    from rdbms_scala_spark.catalog import load_table
+    from rdbms_scala_spark.pipeline.dedup import winnow_fingerprints
     from rdbms_scala_spark.plans import physical_plan
 
-    deriv = physical_plan(
-        cached_winnow_fingerprints(spark, sf_dir, checkpoint=False)
-    )
+    deriv = physical_plan(winnow_fingerprints(load_table(spark, sf_dir, "documents")))
     assert "windowspecdefinition(doc_id" in deriv, deriv[:2000]
     plan = physical_plan(SPECS["dedup_winnowing_pairs"].fn(spark, sf_dir))
     assert "partial_count" in plan, plan[:2000]
