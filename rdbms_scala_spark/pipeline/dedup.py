@@ -492,22 +492,32 @@ def minhash_band_buckets(
 def cached_minhash_sig_cand(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    """The (signatures, banded-candidate-pairs) relations of the
-    MinHash tier, one session relation shared by every query built on
-    them (`dedup_minhash_lsh`, `dedup_minhash_clusters` through its
-    composition, `dedup_minhash_calibration`) — the signature build
-    (num_perm/4 md5 calls per shingle instance) and the banded
-    exchange dominate each of those queries, and the session suite
-    was paying them once per query. At 100 TB the persisted analog is
-    the signature/candidate tables every production dedup job
-    materializes next to the corpus."""
+    """The (sig, cand) relations of the MinHash tier, one session
+    relation shared by every query built on them — the signature
+    build (num_perm/4 md5 calls per shingle instance), the banded
+    exchange and the signature verify join dominate each of those
+    queries, and the session pays them once per corpus. At 100 TB the
+    persisted analog is the signature/candidate tables every
+    production dedup job materializes next to the corpus.
+
+    ``sig`` is (doc_id, sig array<string>), see
+    ``minhash_signatures``. ``cand`` is (doc_a, doc_b, n_match): every
+    distinct doc_a < doc_b pair that shares a (band, band_hash) bucket
+    of 2.._BAND_BUCKET_CAP docs, and ``n_match``, the int count
+    (0..num_perm) of signature positions on which the two docs agree;
+    ``n_match / num_perm`` is the pair's estimated Jaccard."""
 
     def build() -> tuple[DataFrame, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
         # cand derives from sig: without materializing sig first the
         # signature pass would run twice
         sig = materialize(minhash_signatures(shingles_df(docs, n=3, distinct=False)))
-        cand = (
+        # The bucket cap purges mass duplicates before pair expansion:
+        # a K-member duplicate cluster pairs QUADRATICALLY (K=10k ->
+        # 50M pairs from one bucket); the absolute cap is sound because
+        # band_hash is a 128-bit md5, so only genuine near-identical
+        # clusters fill a bucket.
+        pairs = (
             expand_bucket_pairs(
                 minhash_band_buckets(sig),
                 keys=["band", "band_hash"],
@@ -517,15 +527,25 @@ def cached_minhash_sig_cand(
             .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
             .distinct()
         )
+        sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
+        sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
+        n_match = F.expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))")
+        cand = pairs.join(sa, "doc_a").join(sb, "doc_b").select(
+            "doc_a", "doc_b", n_match.alias("n_match")
+        )
         return sig, cand
 
     return session_relation(spark, "minhash_sig_cand", sf_dir, "documents", build)
 
 
-def _minhash_oracle() -> str:
-    """DuckDB mirror of dedup_minhash_lsh: same md5-slice permutation
-    mins, same banded candidate join, same matching-position
-    estimate."""
+def _minhash_sql(cand: bool = True) -> tuple[str, str]:
+    """The DuckDB text of the MinHash tier, shared by its oracles:
+    the CTE list ``toks, idx, sh, sig, bands_all`` (the UNCAPPED band
+    keys) and, with ``cand``, ``bands`` (the capped buckets) and
+    ``cand`` (doc_a < doc_b pairs); plus the matching-position count
+    of the candidate's two signatures joined as ``x`` and ``y``. Same
+    md5-slice permutation mins and band hashes as
+    ``minhash_signatures`` and ``minhash_band_buckets``."""
     h = [
         f"min(substr(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8)) AS h{i}"
         for i in range(_NUM_PERM)
@@ -539,8 +559,7 @@ def _minhash_oracle() -> str:
     matches = " + ".join(
         f"(CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END)" for i in range(_NUM_PERM)
     )
-    return f"""
-    WITH toks AS (
+    ctes = f"""toks AS (
         SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
         FROM documents
     ),
@@ -558,7 +577,9 @@ def _minhash_oracle() -> str:
     ),
     bands_all AS (
         {' UNION ALL '.join(bands)}
-    ),
+    )"""
+    if cand:
+        ctes += f""",
     bands AS (
         SELECT doc_id, band, band_hash FROM (
             SELECT bands_all.*,
@@ -570,7 +591,17 @@ def _minhash_oracle() -> str:
         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM bands a JOIN bands b
           ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    )
+    )"""
+    return ctes, matches
+
+
+def _minhash_oracle() -> str:
+    """DuckDB mirror of dedup_minhash_lsh: same md5-slice permutation
+    mins, same banded candidate join, same matching-position
+    estimate."""
+    ctes, matches = _minhash_sql()
+    return f"""
+    WITH {ctes}
     SELECT doc_a, doc_b, ({matches}) / {_NUM_PERM}.0 AS est_jaccard
     FROM cand
     JOIN sig x ON x.doc_id = doc_a
@@ -596,33 +627,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     window count filters oversized buckets BEFORE the collect — see
     ``expand_bucket_pairs``), and pairs are expanded bucket-locally
     from that bounded array."""
-    # Candidate pairs fused with the mass-dup purge (expand i<j pairs
-    # ONLY for buckets with 2..cap members — a K-member duplicate
-    # cluster pairs QUADRATICALLY, K=10k -> 50M pairs from one
-    # bucket; the absolute cap is sound because band_hash is a
-    # 128-bit md5, so only genuine near-identical clusters fill a
-    # bucket). Signatures + candidates come from the session cache:
-    # round 8 moved the derivation into cached_minhash_sig_cand so
-    # the suite pays the signature build and the banded exchange once
-    # per (session, corpus), not once per minhash query — the round-7
-    # cached_jaccard_pairs discipline applied to the MinHash tier.
-    sig, cand = cached_minhash_sig_cand(spark, sf_dir)
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.expr(
-                    "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-                )
-                / F.lit(_NUM_PERM)
-            ).alias("est_jaccard"),
-        )
-    )
+    _sig, cand = cached_minhash_sig_cand(spark, sf_dir)
     # No rounding: k/32 is exactly representable in binary on both
     # engines (power-of-two denominator), so the comparison needs no
     # tolerance at all. (Rounding would be *safe* here — both engines
@@ -631,9 +636,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # risk: one-ulp drift in the multiply-then-round path when the
     # input sits within an ulp of a step boundary. Exact binary
     # fractions sidestep that entirely.)
-    return est.filter(F.col("est_jaccard") >= 0.7).select(
-        "doc_a", "doc_b", "est_jaccard"
-    )
+    est = (F.col("n_match") / F.lit(_NUM_PERM)).alias("est_jaccard")
+    return cand.select("doc_a", "doc_b", est).filter(F.col("est_jaccard") >= 0.7)
 
 
 # ---------------------------------------------------------------------------
@@ -698,7 +702,9 @@ def _simhash_cand_oracle() -> str:
         FROM sh
     ),
     bits AS (SELECT doc_id, {votes} FROM hashes GROUP BY doc_id),
-    fp AS (SELECT doc_id, ({fp_lo}) AS fp_lo, ({fp_hi}) AS fp_hi FROM bits),
+    fp AS MATERIALIZED (
+        SELECT doc_id, ({fp_lo}) AS fp_lo, ({fp_hi}) AS fp_hi FROM bits
+    ),
     chunks_all AS ({chunk_selects}),
     chunks AS (
         SELECT doc_id, fp_lo, fp_hi, pr, cvk FROM (
@@ -1007,7 +1013,7 @@ def connected_components_edges(
         )
         .distinct()
         # lazy: the probe's aggregate below is the materializing action
-        # (r15 — an eager checkpoint here doubled the per-round job
+        # (an eager checkpoint here would double the per-round job
         # count: one job to checkpoint, one to probe the same rows)
         .localCheckpoint(eager=False)
     )
@@ -1431,7 +1437,7 @@ def contamination_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def contamination_hot_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The contamination family's hot set: trigrams whose TRAIN-side
     document frequency exceeds ``_CONTAM_MAX_DF`` over the standing
-    (v0) corpus. Exposed as its own relation (round 15) because the
+    (v0) corpus. Exposed as its own relation because the
     incremental decontamination readout must subtract the SAME pinned
     hot set from delta-batch shingles that the standing index was
     built with — recomputing it per batch would make the incremental
@@ -1499,16 +1505,10 @@ def dedup_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable, and the final per-doc argmax windows over the handful
     of matched benchmark docs, never the corpus. No all-pairs, no
     corpus-sized shuffle; the shingle relation is the session-cached,
-    train-df-capped one (`contamination_shingles`). Round-14 history,
-    in measurement order: the SCALE sweep first caught this query
-    re-deriving tokenize+explode+distinct per call (the r8 minhash
-    treatment applied); chasing the remaining x64 wall then exposed
-    that count()-timed harness rows were Catalyst-PRUNED (the fix is
-    the noop-sink timing action, bench.py) and that the honest cost
-    was a 1.06e9-row join fan-out from ultra-common trigrams — which
-    the df cap removes by definition of the operator (contamination
-    is sharing RARE n-grams). Honest x64 wall after all three:
-    157 s -> 24.7 s, sublinear vs the 128x token volume."""
+    train-df-capped one (`contamination_shingles`). The df cap is
+    part of the operator (contamination is sharing RARE n-grams), and
+    it removes the join fan-out from ultra-common trigrams, which at
+    x64 was a 1.06e9-row join."""
     sh = contamination_shingles(spark, sf_dir)
     is_bench = F.col("doc_id") % 29 == 0
     bench = sh.filter(is_bench).select(
@@ -1533,7 +1533,7 @@ def dedup_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
     # Per-doc argmax as a COMBINABLE single-long max, not a
-    # row_number window (round 14): pack (n_shared, bench_doc_id)
+    # row_number window: pack (n_shared, bench_doc_id)
     # into one int64 — n_shared * 2^43 + (2^43 - 1 - bench_doc_id) —
     # whose max selects the highest overlap with ties to the SMALLEST
     # benchmark doc, exactly the window's (n_shared DESC,
@@ -1719,7 +1719,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 10. degree distribution of the near-dup graph (round 7)
+# 10. degree distribution of the near-dup graph
 
 
 @register(
@@ -1876,51 +1876,9 @@ def _minhash_calibration_oracle() -> str:
     """Candidate replay of `_minhash_oracle` (same signatures, bands,
     cap, pair set — WITHOUT the 0.7 acceptance threshold) joined to
     the exact per-pair trigram Jaccard."""
-    h = [
-        f"min(substr(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8)) AS h{i}"
-        for i in range(_NUM_PERM)
-    ]
-    bands = []
-    for b in range(_BANDS):
-        cols = " || ',' || ".join(
-            f"h{i}" for i in range(b * _ROWS_PER_BAND, (b + 1) * _ROWS_PER_BAND)
-        )
-        bands.append(f"SELECT doc_id, {b} AS band, md5({cols}) AS band_hash FROM sig")
-    matches = " + ".join(
-        f"(CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END)" for i in range(_NUM_PERM)
-    )
+    ctes, matches = _minhash_sql()
     return f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
-    sig AS (
-        SELECT doc_id, {', '.join(h)}
-        FROM sh GROUP BY doc_id
-    ),
-    bands_all AS (
-        {' UNION ALL '.join(bands)}
-    ),
-    bands AS (
-        SELECT doc_id, band, band_hash FROM (
-            SELECT bands_all.*,
-                   count(*) OVER (PARTITION BY band, band_hash) AS bn
-            FROM bands_all
-        ) WHERE bn <= {_BAND_BUCKET_CAP}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    ),
+    WITH {ctes},
     sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
     inter AS (
         SELECT c.doc_a, c.doc_b, CAST(count(*) AS BIGINT) AS n_inter
@@ -1973,9 +1931,8 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction on both engines; the error column subtracts the same
     two division results in the same order before the single 4dp
     round."""
-    docs = load_table(spark, sf_dir, "documents")
-    sh = shingles_df(docs, n=3, distinct=True)
-    sig, cand = cached_minhash_sig_cand(spark, sf_dir)
+    sh = cached_doc_shingles(spark, sf_dir)
+    _sig, cand = cached_minhash_sig_cand(spark, sf_dir)
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
@@ -1989,20 +1946,10 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    est = F.expr(
-        "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-    ) / F.lit(_NUM_PERM)
+    est = F.col("n_match") / F.lit(_NUM_PERM)
     jac = F.col("n_inter") / F.col("n_union")
     return (
-        cand.join(
-            sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")),
-            "doc_a",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b")),
-            "doc_b",
-        )
-        .join(sz.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
+        cand.join(sz.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
         .join(sz.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
         .join(inter, ["doc_a", "doc_b"], "left")
         .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
@@ -2024,51 +1971,9 @@ def _threshold_sweep_oracle() -> str:
     """Candidate replay (same as the calibration oracle's candidate
     set) bucketed by estimated-Jaccard at 0.05 steps with a
     descending cumulative count."""
-    h = [
-        f"min(substr(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8)) AS h{i}"
-        for i in range(_NUM_PERM)
-    ]
-    bands = []
-    for b in range(_BANDS):
-        cols = " || ',' || ".join(
-            f"h{i}" for i in range(b * _ROWS_PER_BAND, (b + 1) * _ROWS_PER_BAND)
-        )
-        bands.append(f"SELECT doc_id, {b} AS band, md5({cols}) AS band_hash FROM sig")
-    matches = " + ".join(
-        f"(CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END)" for i in range(_NUM_PERM)
-    )
+    ctes, matches = _minhash_sql()
     return f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
-    sig AS (
-        SELECT doc_id, {', '.join(h)}
-        FROM sh GROUP BY doc_id
-    ),
-    bands_all AS (
-        {' UNION ALL '.join(bands)}
-    ),
-    bands AS (
-        SELECT doc_id, band, band_hash FROM (
-            SELECT bands_all.*,
-                   count(*) OVER (PARTITION BY band, band_hash) AS bn
-            FROM bands_all
-        ) WHERE bn <= {_BAND_BUCKET_CAP}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    ),
+    WITH {ctes},
     est AS (
         SELECT CAST(({matches}) * 20 // {_NUM_PERM} AS BIGINT) AS bucket
         FROM cand c
@@ -2103,22 +2008,15 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     curve (pair volume exploding as the threshold drops toward the
     random-agreement floor of ~0.5) is the tuning signal.
 
-    Scale shape: rides the session-cached (signatures, candidates)
-    relation (`cached_minhash_sig_cand`); the histogram is a
+    Scale shape: reads the session-cached candidate relation's
+    ``n_match`` (`cached_minhash_sig_cand`); the histogram is a
     21-bucket aggregate and the cumulative window runs on that
     DOMAIN-bounded relation, never the pair set. est buckets are
     exact integers (matches x 20 // 32) — no float anywhere."""
-    sig, cand = cached_minhash_sig_cand(spark, sf_dir)
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    matches = F.expr(
-        "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-    )
+    _sig, cand = cached_minhash_sig_cand(spark, sf_dir)
     hist = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            F.floor(matches * 20 / _NUM_PERM).cast("long").alias("bucket")
+        cand.select(
+            F.floor(F.col("n_match") * 20 / _NUM_PERM).cast("long").alias("bucket")
         )
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
@@ -2291,7 +2189,7 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 13b. Round 11: exact-substring dedup (Lee et al. 2022, "Deduplicating
+# 13b. exact-substring dedup (Lee et al. 2022, "Deduplicating
 # Training Data Makes Language Models Better" — the ExactSubstr tier).
 # The paper builds a corpus suffix array and removes every substring
 # of >= 50 tokens that appears more than once. The Spark-native
@@ -2306,7 +2204,7 @@ def dedup_span_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # self-join), which is exactly what survives 100 TB.
 
 _SUBSTR_K = 8  # anchor run length = minimum duplicated-substring length
-# The df-cap valve (round 12, promised by the r11 docstring): run
+# The df-cap valve: run
 # hashes whose corpus-wide occurrence count reaches the cap are
 # "ultra-hot" (mega-repeated boilerplate/license blocks). They are
 # collected to the driver (bounded at _SUBSTR_HOT_MAX 16-byte hashes
@@ -2575,7 +2473,7 @@ def dedup_substring_removal_stats(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# 14. Round 9: label-propagation communities + k-hop reach over the
+# 14. label-propagation communities + k-hop reach over the
 # near-dup graph — the two remaining classics of the iterative-graph
 # toolkit (CC gives connectivity, PageRank centrality; LPA gives
 # COMMUNITIES inside a component, BFS gives blast-radius). Both reuse
@@ -2650,9 +2548,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-materialized `cached_jaccard_pairs` at graph_pagerank's
     TIGHT df cap (100, not the 5000 dedup default): a shingle shared
     by >100 docs carries no >=0.7-Jaccard signal, and the uncapped
-    inverted-index join's sum(df^2) blow-up is exactly what filled
-    the disk when this query first joined the x64 smoke — the same
-    failure pagerank hit in round 6. One cap, one shared cache entry
+    inverted-index join's sum(df^2) blow-up fills the disk at x64
+    scale, for this query as for pagerank. One cap, one shared cache entry
     for the whole iterative-graph family."""
     pairs = cached_jaccard_pairs(spark, sf_dir, max_df=_PAGERANK_MAX_DF)
     edges = pairs.select(
@@ -2691,12 +2588,12 @@ def _khop_oracle() -> str:
     rounds = []
     for i in range(1, _KHOP_HOPS + 1):
         rounds.append(f"""
-    f{i} AS (
+    f{i} AS MATERIALIZED (
         SELECT DISTINCT e.v AS doc_id
         FROM edges e JOIN f{i - 1} f ON f.doc_id = e.u
         WHERE e.v NOT IN (SELECT doc_id FROM r{i - 1})
     ),
-    r{i} AS (
+    r{i} AS MATERIALIZED (
         SELECT doc_id FROM r{i - 1} UNION SELECT doc_id FROM f{i}
     )""")
     per_hop = "\nUNION ALL\n".join(
@@ -2705,16 +2602,16 @@ def _khop_oracle() -> str:
         for i in range(_KHOP_HOPS + 1)
     )
     return f"""
-    WITH pairs AS ({_jaccard_pairs_sql(_PAGERANK_MAX_DF)}),
-    edges AS (
+    WITH pairs AS MATERIALIZED ({_jaccard_pairs_sql(_PAGERANK_MAX_DF)}),
+    edges AS MATERIALIZED (
         SELECT doc_a AS u, doc_b AS v FROM pairs
         UNION ALL
         SELECT doc_b AS u, doc_a AS v FROM pairs
     ),
-    f0 AS (
+    f0 AS MATERIALIZED (
         SELECT DISTINCT u AS doc_id FROM edges WHERE u % {_KHOP_SEED_MOD} = 0
     ),
-    r0 AS (SELECT doc_id FROM f0),
+    r0 AS MATERIALIZED (SELECT doc_id FROM f0),
     {','.join(rounds)}
     SELECT CAST(hop AS BIGINT) AS hop,
            CAST(frontier_size AS BIGINT) AS frontier_size,
@@ -2788,7 +2685,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 15. Round 9: winnowing fingerprints (the MOSS selection rule) — a
+# 15. winnowing fingerprints (the MOSS selection rule) — a
 # POSITION-AWARE near-dup tier: unlike MinHash (whole-set similarity)
 # or containment (set inclusion), winnowing guarantees that any
 # shared run of >= w+k-1 tokens leaves at least one shared selected
@@ -2864,8 +2761,8 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     FOLLOWING) so each full window contributes its min — NOT the
     trailing-frame ``h == wmin`` rule, which is a strict subset that
     drops a window entirely whenever a smaller hash sits just left of
-    it and therefore breaks the guarantee (round-9 verdict finding #1;
-    falsified by test_winnowing_shared_run_guarantee).
+    it and therefore breaks the guarantee (see
+    test_winnowing_shared_run_guarantee).
 
     Guarantee: a shared token run of length >= w + k - 1 contains
     >= w consecutive identical grams, so the window starting at the
@@ -3203,7 +3100,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 16. Round 9: cross-tier dedup report — the one-page readout that
+# 16. cross-tier dedup report — the one-page readout that
 # composes the tiers above. A pipeline does not read 5 pair tables;
 # it reads "how much duplication does each tier see" and then drills
 # into whichever tier is surprising.
@@ -3317,7 +3214,7 @@ def dedup_tier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# 17. Round 9: LSH bucket-occupancy stats + global clustering
+# 17. LSH bucket-occupancy stats + global clustering
 # coefficient — the two operational readouts the tiers above are
 # TUNED by: bucket occupancy is what _BAND_BUCKET_CAP was set from
 # (the x64 generator artifact that motivated the purge showed up as
@@ -3325,48 +3222,10 @@ def dedup_tier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is the one-number graph-shape summary behind the triangle tiers.
 
 
-def _bands_all_sql() -> str:
-    """The signature + UNCAPPED band-key derivation shared with
-    _minhash_oracle (pre-purge: occupancy stats must see the buckets
-    the cap would drop)."""
-    h = [
-        f"min(substr(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8)) AS h{i}"
-        for i in range(_NUM_PERM)
-    ]
-    bands = []
-    for b in range(_BANDS):
-        cols = " || ',' || ".join(
-            f"h{i}" for i in range(b * _ROWS_PER_BAND, (b + 1) * _ROWS_PER_BAND)
-        )
-        bands.append(
-            f"SELECT doc_id, {b} AS band, md5({cols}) AS band_hash FROM sig"
-        )
-    return f"""
-    toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
-    sig AS (
-        SELECT doc_id, {', '.join(h)}
-        FROM sh GROUP BY doc_id
-    ),
-    bands_all AS (
-        {' UNION ALL '.join(bands)}
-    )"""
-
-
 @register(
     "dedup_lsh_bucket_stats",
     oracle=f"""
-    WITH {_bands_all_sql()},
+    WITH \n    {_minhash_sql(cand=False)[0]},
     sizes AS (
         SELECT band, band_hash, CAST(count(*) AS BIGINT) AS n
         FROM bands_all GROUP BY band, band_hash
@@ -3406,11 +3265,10 @@ def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one exchange on (band, band_hash) — the same
     aggregation skeleton as candidate generation itself — then a
     7-row per-band reduction. Signatures ride the session-cached
-    MinHash relation (``cached_minhash_sig_cand``, round 13 — r12
-    verdict #4: this row was re-deriving the signature pass its
-    siblings share; min over duplicated shingles equals min over
-    distinct ones, so the cached distinct=False build is
-    value-identical to the distinct build this query used before)."""
+    MinHash relation (``cached_minhash_sig_cand``); min over
+    duplicated shingles equals min over distinct ones, so its
+    distinct=False build is value-identical to the oracle's distinct
+    shingles."""
     sig, _cand = cached_minhash_sig_cand(spark, sf_dir)
     bands0 = minhash_band_buckets(sig)
     sizes = bands0.groupBy("band", "band_hash").agg(
@@ -3524,7 +3382,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 10: b-bit minwise hashing (Li & Koenig, WWW 2010) — the
+# b-bit minwise hashing (Li & Koenig, WWW 2010) — the
 # storage-compression variant of the MinHash family: keep only the
 # lowest b bits of each permutation minimum and correct the collision
 # inflation analytically.
@@ -3537,56 +3395,14 @@ def _minhash_bbit_oracle() -> str:
     cap, pair set, no threshold) emitting the full-signature estimate
     next to the b = 4 bit corrected estimator (the last hex char of
     each 8-hex permutation min IS the low 4 bits)."""
-    h = [
-        f"min(substr(md5('{i // 4}:' || shingle), {(i % 4) * 8 + 1}, 8)) AS h{i}"
-        for i in range(_NUM_PERM)
-    ]
-    bands = []
-    for b in range(_BANDS):
-        cols = " || ',' || ".join(
-            f"h{i}" for i in range(b * _ROWS_PER_BAND, (b + 1) * _ROWS_PER_BAND)
-        )
-        bands.append(f"SELECT doc_id, {b} AS band, md5({cols}) AS band_hash FROM sig")
-    matches = " + ".join(
-        f"(CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END)" for i in range(_NUM_PERM)
-    )
+    ctes, matches = _minhash_sql()
     bmatches = " + ".join(
         f"(CASE WHEN substr(x.h{i}, 8, 1) = substr(y.h{i}, 8, 1) "
         f"THEN 1 ELSE 0 END)"
         for i in range(_NUM_PERM)
     )
     return f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
-    sig AS (
-        SELECT doc_id, {', '.join(h)}
-        FROM sh GROUP BY doc_id
-    ),
-    bands_all AS (
-        {' UNION ALL '.join(bands)}
-    ),
-    bands AS (
-        SELECT doc_id, band, band_hash FROM (
-            SELECT bands_all.*,
-                   count(*) OVER (PARTITION BY band, band_hash) AS bn
-            FROM bands_all
-        ) WHERE bn <= {_BAND_BUCKET_CAP}
-    ),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id
-    ),
+    WITH {ctes},
     est AS (
         SELECT doc_a, doc_b,
                ({matches}) / {_NUM_PERM}.0 AS e_full,
@@ -3633,12 +3449,11 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: reuses the session-cached (signatures, candidates)
     relation (`cached_minhash_sig_cand` — bucket-cap-bounded pair
-    set), then per-pair zip_with counts in codegen: no new shuffle,
-    no Python, cost linear in candidates."""
+    set, full-signature matches precomputed as ``n_match``), then a
+    per-pair low-bit zip_with count in codegen: no new shuffle, no
+    Python, cost linear in candidates."""
     sig, cand = cached_minhash_sig_cand(spark, sf_dir)
-    e_full = F.expr(
-        "size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))"
-    ) / F.lit(_NUM_PERM)
+    e_full = F.col("n_match") / F.lit(_NUM_PERM)
     e_raw = F.expr(
         "size(filter(zip_with(sig_a, sig_b, "
         "(x, y) -> substring(x, 8, 1) = substring(y, 8, 1)), v -> v))"
@@ -3665,11 +3480,9 @@ def dedup_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 10: SimHash acceptance-band distance profile — the tuning
-# readout the SimHash tier lacked (MinHash has calibration, the
-# threshold sweep, bucket stats and the b-bit table; SimHash's only
-# knob is the Hamming threshold and until now nothing showed where
-# the pair mass sits against it).
+# SimHash acceptance-band distance profile — the tuning readout for
+# SimHash's only knob, the Hamming threshold: where the pair mass
+# sits against it.
 
 
 def _simhash_hist_oracle() -> str:
@@ -3840,11 +3653,11 @@ def dedup_contamination_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the `dedup_threshold_sweep` discipline applied to decontamination:
     for every candidate cutoff t in 1..10, how many training docs
     share >= t distinct trigrams with some benchmark doc, and what
-    corpus fraction that flags. `dedup_contamination_check` and the
-    round-13 report card hardcode t=3; this is the table that choice
-    is read off (too low floods the removal list with docs sharing a
-    common idiom, too high misses paraphrased leaks — the knee of
-    flagged_fraction is the operating point).
+    corpus fraction that flags. `dedup_contamination_check` and
+    `pipeline_decontamination_report` hardcode t=3; this is the table
+    that choice is read off (too low floods the removal list with docs
+    sharing a common idiom, too high misses paraphrased leaks — the
+    knee of flagged_fraction is the operating point).
 
     Scale shape: the per-(train doc, bench doc) overlap counts are
     the SAME broadcast-join aggregate the contamination check pays

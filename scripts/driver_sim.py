@@ -29,9 +29,10 @@ spark = (
     .getOrCreate()
 )
 
-# spill to a private temp dir removed at exit, not to ./.tmp
+# spill to a private temp dir removed at exit, not to ./.tmp; 3 GB
+# of memory at most beside the Spark JVM
 spill = tempfile.mkdtemp(prefix="duckdb_spill_")
-con = duckdb.connect(config={"temp_directory": spill})
+con = duckdb.connect(config={"temp_directory": spill, "memory_limit": "3GB"})
 
 
 @atexit.register

@@ -54,10 +54,11 @@ def sf_dir():
 @contextlib.contextmanager
 def _duckdb_connection():
     """A DuckDB connection that spills to its own temp dir, removed
-    when the connection closes. DuckDB's default spill dir is ./.tmp,
-    which a killed run leaves behind."""
+    when the connection closes, and is held to 3 GB of memory beside
+    the Spark JVM. DuckDB's default spill dir is ./.tmp, which a killed
+    run leaves behind."""
     spill = tempfile.mkdtemp(prefix="duckdb_spill_")
-    con = duckdb.connect(config={"temp_directory": spill})
+    con = duckdb.connect(config={"temp_directory": spill, "memory_limit": "3GB"})
     try:
         yield con
     finally:

@@ -779,6 +779,20 @@ def test_minhash_bbit_reuses_candidates_no_python(spark, sf_dir):
     assert "EvalPython" not in plan, plan[:2000]
 
 
+def test_minhash_lsh_and_sweep_read_only_candidates(spark, sf_dir):
+    """The candidate relation carries each pair's signature-match
+    count, so the accepted pairs and the threshold histogram are a
+    filter / aggregate over that one checkpoint: no signature join,
+    no source scan."""
+    from rdbms_scala_spark.plans import physical_plan
+
+    for name in ("dedup_minhash_lsh", "dedup_threshold_sweep"):
+        plan = physical_plan(SPECS[name].fn(spark, sf_dir), "simple")
+        assert "Join" not in plan, (name, plan[:2000])
+        assert "Scan parquet" not in plan, (name, plan[:2000])
+        assert plan.count("Scan ExistingRDD") == 1, (name, plan[:2000])
+
+
 def test_simhash_histogram_rides_production_pairs(spark, sf_dir):
     """The Hamming histogram must consume the production simhash pair
     relation (same banding ladder, same caps) and add only an 11-key
