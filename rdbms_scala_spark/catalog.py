@@ -12,6 +12,7 @@ served, without a per-table build step.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,11 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Small dimension tables — always broadcast-join these (at any scale
-#: factor region/nation are bounded; customer/supplier/part grow but
-#: stay orders of magnitude below the fact tables).
-BROADCAST_DIMS = ("region", "nation")
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -42,20 +38,42 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: Memoized DataFrames: rebuilding the same scan re-reads Parquet
-#: footers and re-crosses the Py4J boundary (~100ms/table — dominates
-#: multi-table query build time). DataFrames are immutable plans, so
-#: sharing one per (session, dir, table) is safe; Spark's cache
-#: manager then also recognizes repeated plans for .cache() reuse.
-#: The memo pins the file listing taken at first read — the driver
-#: testdata is immutable, but call clear_table_memo() after rewriting
-#: a table in place (and note stopped sessions' entries linger until
-#: cleared).
-_df_memo: dict[tuple[str, str, str], DataFrame] = {}
+def table_fingerprint(sf_dir: str, *names: str) -> str:
+    """Cheap driver-side modification fingerprint of parquet tables:
+    (path, size, mtime_ns) of every data file under them, hashed.
+    Detects a table overwritten under the same path without reading
+    any data."""
+    parts: list[str] = []
+    for name in names:
+        root = table_path(sf_dir, name)
+        if os.path.isdir(root):
+            for dirpath, _dirs, files in os.walk(root):
+                for f in files:
+                    p = os.path.join(dirpath, f)
+                    st = os.stat(p)
+                    parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
+        elif os.path.exists(root):
+            st = os.stat(root)
+            parts.append(f"{root}|{st.st_size}|{st.st_mtime_ns}")
+    # os.walk's order is filesystem-dependent: sort so an identical
+    # on-disk table always fingerprints the same.
+    parts.sort()
+    return hashlib.md5("\n".join(parts).encode()).hexdigest()
+
+
+#: Memoized scans, (fingerprint, DataFrame) per (application, dir,
+#: table): rebuilding the same scan re-reads Parquet footers and
+#: re-crosses the Py4J boundary (~100ms/table — dominates multi-table
+#: query build time). DataFrames are immutable plans, so sharing one
+#: is safe; Spark's cache manager then also recognizes repeated plans
+#: for .cache() reuse. A scan pins the file listing of its first read,
+#: so an entry is valid only while the table's fingerprint is
+#: unchanged: a table rewritten in place is scanned again.
+_df_memo: dict[tuple[str, str, str], tuple[str, DataFrame]] = {}
 
 
 def clear_table_memo() -> None:
-    """Drop all memoized scans (after an in-place table rewrite)."""
+    """Drop all memoized scans, freeing their plans."""
     _df_memo.clear()
 
 
@@ -77,7 +95,8 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy Parquet scan of one table (memoized per session+path).
+    """Lazy Parquet scan of one table (memoized per session+path while
+    the table's fingerprint is unchanged).
 
     ``events.ts`` is read as a nanosecond long (see
     ``ensure_nanos_conf``); convert to a microsecond timestamp by
@@ -88,10 +107,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     if name == "events":
         ensure_nanos_conf(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _df_memo.get(key)
-    if cached is not None:
-        return cached
+    app = spark.sparkContext.applicationId
+    key = (app, sf_dir, name)
+    fp = table_fingerprint(sf_dir, name)
+    hit = _df_memo.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -102,7 +123,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # NTZ->LTZ cast is instant-preserving and ANSI-legal.
         ensure_nanos_conf(spark)
         df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    _df_memo[key] = df
+    # at most one live application per process, as in session_relation
+    for stale in [k for k in list(_df_memo) if k[0] != app]:
+        _df_memo.pop(stale, None)
+    _df_memo[key] = (fp, df)
     return df
 
 
@@ -110,12 +134,11 @@ def load_tables(
     spark: SparkSession,
     sf_dir: str = DEFAULT_SF_DIR,
     names: tuple[str, ...] = TABLES,
-    register: bool = True,
 ) -> dict[str, DataFrame]:
-    """Load tables and (optionally) register them as temp views so the
-    SQL surface (``spark.sql``) sees the same names as the DataFrame
-    surface. Missing files are skipped so callers can work against
-    partial directories.
+    """Load tables and register them as temp views so the SQL surface
+    (``spark.sql``) sees the same names as the DataFrame surface.
+    Missing files are skipped so callers can work against partial
+    directories.
     """
     out: dict[str, DataFrame] = {}
     for name in names:
@@ -123,7 +146,6 @@ def load_tables(
         if not os.path.exists(path):
             continue
         df = load_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         out[name] = df
     return out

@@ -252,7 +252,6 @@ def two_phase_skew_join(
     right: DataFrame,
     left_key: str,
     right_key: str,
-    salt_factor: int = _SALT_FACTOR,
     hot_threshold: int | None = 100_000,
 ) -> DataFrame:
     """Equi-join with hot-key-only grid salting; result identical to
@@ -261,7 +260,8 @@ def two_phase_skew_join(
     Phase split: keys whose count exceeds ``hot_threshold`` on EITHER
     side are "hot" (a key heavy only on the right would otherwise
     still funnel one reducer), and each hot key pays only for the
-    side(s) actually skewed:
+    side(s) actually skewed (salts ``i`` and ``j`` range over [0, S),
+    S = ``_SALT_FACTOR``):
 
     - hot on the LEFT only: left rows draw a row salt ``i``, the
       (few) matching right rows replicate across all ``i`` — the
@@ -345,9 +345,9 @@ def two_phase_skew_join(
     right_cold = right.join(renamed(hot_any), right_key, "left_anti")
     cold = left_cold.join(right_cold, left_cold[left_key] == right_cold[right_key])
 
-    all_salts = F.array(*[F.lit(i) for i in range(salt_factor)])
-    row_salt_l = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt_factor))
-    row_salt_r = F.pmod(F.xxhash64(*[F.col(c) for c in right.columns]), F.lit(salt_factor))
+    all_salts = F.array(*[F.lit(i) for i in range(_SALT_FACTOR)])
+    row_salt_l = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(_SALT_FACTOR))
+    row_salt_r = F.pmod(F.xxhash64(*[F.col(c) for c in right.columns]), F.lit(_SALT_FACTOR))
 
     def one_sided(keys, salted_is_left):
         """Salt the skewed side per row, replicate the other side S ways."""

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
+from rdbms_scala_spark.pipeline.dedup import _contam_sh_chain
 from rdbms_scala_spark.registry import register
 from rdbms_scala_spark.session import session_relation
 
@@ -38,16 +39,16 @@ _PACK_BUDGET = 256  # tokens per pack
 _PACK_SHARDS = 8  # md5-prefix shards; at scale ~ number of ingest workers
 
 
-def chunked_docs(docs: DataFrame, width: int = _CHUNK_W, stride: int = _CHUNK_S) -> DataFrame:
+def chunked_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, chunk_id, chunk_start, chunk_text) fixed-width windows.
 
-    Chunk count per doc: 1 when n_chars <= width, else
-    ceil((n_chars - width)/stride) + 1 — the last chunk is the
+    Chunk count per doc: 1 when n_chars <= _CHUNK_W, else
+    ceil((n_chars - _CHUNK_W)/_CHUNK_S) + 1 — the last chunk is the
     (possibly short) tail, and every char belongs to >= 1 chunk.
     Integer arithmetic only, so Spark and DuckDB agree exactly."""
     n_extra = F.when(
-        F.col("n_chars") > width,
-        F.expr(f"(n_chars - {width} + {stride} - 1) div {stride}"),
+        F.col("n_chars") > _CHUNK_W,
+        F.expr(f"(n_chars - {_CHUNK_W} + {_CHUNK_S} - 1) div {_CHUNK_S}"),
     ).otherwise(F.lit(0))
     return (
         docs.select("doc_id", "text", "n_chars", n_extra.alias("k"))
@@ -59,8 +60,8 @@ def chunked_docs(docs: DataFrame, width: int = _CHUNK_W, stride: int = _CHUNK_S)
         .select(
             "doc_id",
             "chunk_id",
-            (F.col("chunk_id") * stride).alias("chunk_start"),
-            F.expr(f"substring(text, chunk_id * {stride} + 1, {width})").alias(
+            (F.col("chunk_id") * _CHUNK_S).alias("chunk_start"),
+            F.expr(f"substring(text, chunk_id * {_CHUNK_S} + 1, {_CHUNK_W})").alias(
                 "chunk_text"
             ),
         )
@@ -479,10 +480,7 @@ def pipeline_pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _decontamination_report_oracle() -> str:
-    from rdbms_scala_spark.pipeline.dedup import (
-        _contam_sh_chain,
-        _substring_spans_cte,
-    )
+    from rdbms_scala_spark.pipeline.dedup import _substring_spans_cte
 
     return f"""
     WITH {_substring_spans_cte()},
@@ -695,8 +693,6 @@ def pipeline_decontamination_report(
 # incrementally-merged v1 numbers while the oracle recomputes v1 from
 # scratch; any error in the merge arithmetic is a hash mismatch.
 
-from rdbms_scala_spark.pipeline.dedup import _contam_sh_chain as _sh_chain
-
 
 def _decontam_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The change feed between corpus epoch v0 (``documents``) and the
@@ -809,6 +805,8 @@ def _v0_standing_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _decontam_incremental_oracle() -> str:
+    # v1sh anti-joins the v0 ``hot`` set: the cap stays pinned at the
+    # index epoch, as contamination_hot_shingles pins it on the Spark side
     return f"""
     WITH m AS (SELECT max(doc_id) AS mx FROM documents),
     upd AS (
@@ -842,7 +840,7 @@ def _decontam_incremental_oracle() -> str:
         SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
         FROM documents
     ),
-    {_sh_chain()},
+    {_contam_sh_chain()},
     bench AS (
         SELECT doc_id AS bench_doc_id, shingle FROM sh WHERE doc_id % 29 = 0
     ),
@@ -856,7 +854,16 @@ def _decontam_incremental_oracle() -> str:
         SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
         FROM v1train
     ),
-    {_sh_chain(toks="v1toks", prefix="v1", hot_from="hot")},
+    v1sh_all AS (
+        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2]
+               AS shingle
+        FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
+              FROM v1toks WHERE len(t) >= 3)
+    ),
+    v1sh AS (
+        SELECT s.doc_id, s.shingle FROM v1sh_all s
+        LEFT JOIN hot h ON s.shingle = h.shingle WHERE h.shingle IS NULL
+    ),
     flags1 AS (
         SELECT DISTINCT doc_id FROM (
             SELECT t.doc_id FROM v1sh t JOIN bench b USING (shingle)

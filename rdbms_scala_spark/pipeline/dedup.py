@@ -26,8 +26,6 @@ DuckDB oracles can reproduce it exactly.
 
 from __future__ import annotations
 
-import numbers
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -40,10 +38,10 @@ from rdbms_scala_spark.session import materialize, session_relation
 # shared building blocks
 
 
-def tokens(col: str = "text"):
-    """Whitespace tokens of lower-cased trimmed text (matches DuckDB
-    regexp_split_to_array(lower(trim(..)), '\\s+'))."""
-    return F.split(F.lower(F.trim(F.col(col))), r"\s+")
+def tokens():
+    """Whitespace tokens of the lower-cased trimmed ``text`` column
+    (matches DuckDB regexp_split_to_array(lower(trim(..)), '\\s+'))."""
+    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
 
 
 def shingles_df(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
@@ -94,7 +92,7 @@ def cap_shingle_df(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-def purge_oversized_buckets(df: DataFrame, keys: list[str], cap) -> DataFrame:
+def purge_oversized_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
     """Drop every row of any bucket (group over ``keys``) larger than
     ``cap`` — the guard that keeps bucket-pairing joins from going
     quadratic on mass-duplicate clusters (used by the Levenshtein
@@ -102,11 +100,6 @@ def purge_oversized_buckets(df: DataFrame, keys: list[str], cap) -> DataFrame:
     lists. The MinHash band join and SimHash chunk join use the fused
     ``expand_bucket_pairs`` form instead, which applies the same cap
     inside their one aggregation exchange).
-
-    ``cap`` is an int, or a ONE-ROW DataFrame carrying the threshold
-    as column ``__cap`` (for occupancy-relative caps, e.g. derived
-    from a corpus count) — it is broadcast into the bucket-size
-    relation, never onto ``df``.
 
     Join shape mirrors ``cap_shingle_df``: the OVERSIZED key set (tiny
     by construction — only buckets past the cap) is broadcast for a
@@ -116,20 +109,12 @@ def purge_oversized_buckets(df: DataFrame, keys: list[str], cap) -> DataFrame:
         "purge_oversized_buckets reserves column name '__bn' for the "
         "bucket-size count; rename the input column"
     )
-    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("__bn"))
-    if isinstance(cap, bool) or not isinstance(cap, (numbers.Integral, DataFrame)):
-        raise TypeError(
-            f"cap must be an integer or a one-row DataFrame with column "
-            f"'__cap', got {type(cap).__name__}"
-        )
-    if isinstance(cap, numbers.Integral):
-        oversized = sizes.filter(F.col("__bn") > int(cap)).select(*keys)
-    else:
-        oversized = (
-            sizes.crossJoin(F.broadcast(cap))
-            .filter(F.col("__bn") > F.col("__cap"))
-            .select(*keys)
-        )
+    oversized = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__bn"))
+        .filter(F.col("__bn") > cap)
+        .select(*keys)
+    )
     return df.join(F.broadcast(oversized), keys, "left_anti")
 
 
@@ -430,10 +415,10 @@ _ROWS_PER_BAND = _NUM_PERM // _BANDS
 _BAND_BUCKET_CAP = 64  # max docs per (band, band_hash) in the pair join
 
 
-def minhash_signatures(sh: DataFrame, num_perm: int = _NUM_PERM) -> DataFrame:
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, sig array<string>): per-permutation min of seeded md5
     hex over the doc's shingles. One aggregation; signature size is
-    fixed (num_perm values) regardless of doc length.
+    fixed (_NUM_PERM values) regardless of doc length.
 
     Permutation hash i is the i%4-th 8-hex-char slice of
     ``md5('<i div 4>:' || shingle)``, compared as a *string*:
@@ -441,7 +426,7 @@ def minhash_signatures(sh: DataFrame, num_perm: int = _NUM_PERM) -> DataFrame:
     the shingle space, so the min-hash collision property (P[min_a =
     min_b] = Jaccard) holds unchanged, and disjoint slices of one
     digest are as independent as separate digests — each shingle pays
-    num_perm/4 md5 calls instead of num_perm (the md5 is the dominant
+    _NUM_PERM/4 md5 calls instead of _NUM_PERM (the md5 is the dominant
     per-row cost of the signature pass; 32-bit slice mins also shrink
     the shuffled aggregate state 4x vs full digests, with collision
     probability ~n^2/2^33 per doc — negligible). md5 hex is
@@ -452,38 +437,28 @@ def minhash_signatures(sh: DataFrame, num_perm: int = _NUM_PERM) -> DataFrame:
         "doc_id",
         *[
             F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle"))).alias(f"H{j}")
-            for j in range((num_perm + 3) // 4)
+            for j in range((_NUM_PERM + 3) // 4)
         ],
     )
     mins = [
         F.min(F.substring(F.col(f"H{i // 4}"), (i % 4) * 8 + 1, 8)).alias(f"h{i}")
-        for i in range(num_perm)
+        for i in range(_NUM_PERM)
     ]
     agg = hashed.groupBy("doc_id").agg(*mins)
-    return agg.select("doc_id", F.array(*[f"h{i}" for i in range(num_perm)]).alias("sig"))
+    return agg.select("doc_id", F.array(*[f"h{i}" for i in range(_NUM_PERM)]).alias("sig"))
 
 
-def minhash_band_buckets(
-    sig: DataFrame,
-    num_perm: int = _NUM_PERM,
-    rows_per_band: int = _ROWS_PER_BAND,
-) -> DataFrame:
+def minhash_band_buckets(sig: DataFrame) -> DataFrame:
     """(doc_id, band, band_hash): each doc's LSH band keys — the
     banding used by dedup_minhash_lsh, named so tests exercise the
-    production constants rather than re-implementing them. The band
-    count derives from the SIGNATURE length (``num_perm`` must match
-    the ``minhash_signatures`` call): slicing past a shorter signature
-    would silently give every doc the same md5('') in the high bands —
-    one full-corpus bucket per band."""
-    if num_perm % rows_per_band:
-        raise ValueError(f"num_perm {num_perm} not divisible by {rows_per_band}")
-    n_bands = num_perm // rows_per_band
+    production constants rather than re-implementing them."""
+    r = _ROWS_PER_BAND
     return sig.select(
         "doc_id",
         F.explode(
             F.expr(
-                f"transform(sequence(0, {n_bands - 1}), "
-                f"b -> struct(b AS band, md5(concat_ws(',', slice(sig, b * {rows_per_band} + 1, {rows_per_band}))) AS bh))"
+                f"transform(sequence(0, {_BANDS - 1}), "
+                f"b -> struct(b AS band, md5(concat_ws(',', slice(sig, b * {r} + 1, {r}))) AS bh))"
             )
         ).alias("e"),
     ).select("doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("band_hash"))
@@ -494,7 +469,7 @@ def cached_minhash_sig_cand(
 ) -> tuple[DataFrame, DataFrame]:
     """The (sig, cand) relations of the MinHash tier, one session
     relation shared by every query built on them — the signature
-    build (num_perm/4 md5 calls per shingle instance), the banded
+    build (_NUM_PERM/4 md5 calls per shingle instance), the banded
     exchange and the signature verify join dominate each of those
     queries, and the session pays them once per corpus. At 100 TB the
     persisted analog is the signature/candidate tables every
@@ -504,8 +479,8 @@ def cached_minhash_sig_cand(
     ``minhash_signatures``. ``cand`` is (doc_a, doc_b, n_match): every
     distinct doc_a < doc_b pair that shares a (band, band_hash) bucket
     of 2.._BAND_BUCKET_CAP docs, and ``n_match``, the int count
-    (0..num_perm) of signature positions on which the two docs agree;
-    ``n_match / num_perm`` is the pair's estimated Jaccard."""
+    (0.._NUM_PERM) of signature positions on which the two docs agree;
+    ``n_match / _NUM_PERM`` is the pair's estimated Jaccard."""
 
     def build() -> tuple[DataFrame, DataFrame]:
         docs = load_table(spark, sf_dir, "documents")
@@ -981,9 +956,10 @@ _CC_ORACLE = f"""
 """
 
 
-def connected_components_edges(
-    pairs: DataFrame, max_rounds: int = 50
-) -> tuple[DataFrame, int]:
+_CC_MAX_ROUNDS = 50
+
+
+def connected_components_edges(pairs: DataFrame) -> tuple[DataFrame, int]:
     """Connected components over an undirected edge list via the
     alternating large-star/small-star algorithm (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC'14 — public
@@ -1031,7 +1007,7 @@ def connected_components_edges(
 
     prev = probe(E)
     rounds = 0
-    for _ in range(max_rounds):
+    for _ in range(_CC_MAX_ROUNDS):
         # large-star: for every node, hang each LARGER neighbor under
         # the minimum of its neighborhood (including itself)
         sym = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -1063,7 +1039,7 @@ def connected_components_edges(
         prev = cur
     else:
         raise RuntimeError(
-            f"connected-components did not converge in {max_rounds} rounds"
+            f"connected-components did not converge in {_CC_MAX_ROUNDS} rounds"
         )
     # fixpoint is a star forest: every edge is (member, root); roots
     # label themselves
@@ -1378,34 +1354,26 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CONTAM_MAX_DF = 1000
 
 
-def _contam_sh_chain(toks: str = "toks", prefix: str = "",
-                     hot_from: str | None = None) -> str:
+def _contam_sh_chain() -> str:
     """Oracle CTE chain for the contamination family (requires a
-    ``{toks}(doc_id, t)`` CTE upstream): the distinct per-doc trigram
+    ``toks(doc_id, t)`` CTE upstream): the distinct per-doc trigram
     set MINUS trigrams whose TRAIN-side document frequency exceeds
     ``_CONTAM_MAX_DF``. Shared verbatim by the check, the sweep and
     the decontamination reports so the capped semantics cannot drift
-    between them. ``prefix`` namespaces the emitted CTEs so one query
-    can instantiate the chain for two corpus epochs; ``hot_from``
-    names an ALREADY-BUILT hot-set CTE to anti-join against instead
-    of deriving one — the incremental readout pins the hot set at the
-    index epoch (v0) and must not recompute it from the new corpus."""
-    p = prefix
-    hot_cte = "" if hot_from else f"""{p}hot AS (
-        SELECT shingle FROM {p}sh_all WHERE doc_id % 29 <> 0
-        GROUP BY shingle HAVING count(*) > {_CONTAM_MAX_DF}
-    ),
-    """
-    hot_name = hot_from if hot_from else f"{p}hot"
-    return f"""{p}sh_all AS (
+    between them."""
+    return f"""sh_all AS (
         SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2]
                AS shingle
         FROM (SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-              FROM {toks} WHERE len(t) >= 3)
+              FROM toks WHERE len(t) >= 3)
     ),
-    {hot_cte}{p}sh AS (
-        SELECT s.doc_id, s.shingle FROM {p}sh_all s
-        LEFT JOIN {hot_name} h ON s.shingle = h.shingle WHERE h.shingle IS NULL
+    hot AS (
+        SELECT shingle FROM sh_all WHERE doc_id % 29 <> 0
+        GROUP BY shingle HAVING count(*) > {_CONTAM_MAX_DF}
+    ),
+    sh AS (
+        SELECT s.doc_id, s.shingle FROM sh_all s
+        LEFT JOIN hot h ON s.shingle = h.shingle WHERE h.shingle IS NULL
     )"""
 
 
@@ -1649,13 +1617,11 @@ _PAGERANK_ORACLE = f"""
 """
 
 
-def pagerank_edges(
-    edges: DataFrame, iters: int = _PR_ITERS, scale: int = _PR_SCALE
-) -> DataFrame:
+def pagerank_edges(edges: DataFrame) -> DataFrame:
     """PageRank over a directed edge list (u, v), computed entirely in
     INTEGER arithmetic: ranks live at a fixed 1e9 scale, per-edge
     contributions are integer-divided by out-degree, and the damping
-    step is (15*scale)//100 + (85*sum)//100 — every operation exact
+    step is (15*_PR_SCALE)//100 + (85*sum)//100 — every operation exact
     and order-independent, so a 5-iteration run is bit-identical
     across engines AND across shuffle orders (the float formulation
     re-associates sums differently every run; this one cannot).
@@ -1669,9 +1635,9 @@ def pagerank_edges(
     few rounds exactly as connected_components_edges does; at 5
     rounds the plan stays shallow enough not to bother."""
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-    ranks = deg.select(F.col("u").alias("doc_id"), F.lit(scale).cast("long").alias("r"))
-    base = (15 * scale) // 100
-    for _ in range(iters):
+    ranks = deg.select(F.col("u").alias("doc_id"), F.lit(_PR_SCALE).cast("long").alias("r"))
+    base = (15 * _PR_SCALE) // 100
+    for _ in range(_PR_ITERS):
         ranks = (
             edges.join(ranks, edges["u"] == ranks["doc_id"])
             .join(deg, "u")

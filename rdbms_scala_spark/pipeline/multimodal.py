@@ -228,13 +228,13 @@ def _feature_seed(doc_id: int, meta: dict) -> str:
     )
 
 
-def _fake_features(seed: str, dim: int = FEATURE_DIM) -> list[float]:
+def _fake_features(seed: str) -> list[float]:
     """Deterministic fake embedding: sha256-seeded values in [0, 1).
     Stands in for an image/audio embedding *model* (the only part of
     the pipeline with no stdlib implementation); the container decode
     that produces the seed is real (see parse_media_header)."""
     h = hashlib.sha256(seed.encode()).digest()
-    return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
+    return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(FEATURE_DIM)]
 
 
 @register(

@@ -142,15 +142,16 @@ _LSH_DIM = 64  # embedding dimensionality (TESTDATA.md)
 _LSH_QUANT = 4096  # 2^12 — power-of-two scaling is EXACT on doubles
 
 
-def _plane_weights(band: int, row: int, dim: int = _LSH_DIM) -> list[int]:
-    """Integer hyperplane weights in [-1000, 1000] for (band, row),
-    derived from hashlib.md5 of "band:row:dim" — deterministic with no
-    RNG state, and (being plain literals) reproducible by ANY engine."""
+def _plane_weights(band: int, row: int) -> list[int]:
+    """Integer hyperplane weights in [-1000, 1000] for (band, row), one
+    per embedding dimension j, derived from hashlib.md5 of
+    "band:row:j" — deterministic with no RNG state, and (being plain
+    literals) reproducible by ANY engine."""
     import hashlib
 
     return [
         int(hashlib.md5(f"{band}:{row}:{j}".encode()).hexdigest()[:8], 16) % 2001 - 1000
-        for j in range(dim)
+        for j in range(_LSH_DIM)
     ]
 
 
@@ -368,37 +369,13 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Gate threshold 0.3, not the production default 0.8: the synthetic
-# embeddings are near-random, so no same-label pair reaches 0.8 at
-# sf0.01 and the driver row would match the oracle on zero rows
-# (vacuous — round-4 verdict). At 0.3 the sf0.01 result has ~100 rows;
-# the nearest pair cosine is ~2e-4 from the threshold and ~7e-6 from a
-# 3-decimal rounding boundary, so the cross-engine hash is float-safe.
+# Cosine threshold 0.3: the synthetic embeddings are near-random, so
+# no same-label pair reaches 0.8 at sf0.01 and the query would match
+# the oracle on zero rows (vacuous). At 0.3 the sf0.01 result has ~100
+# rows; the nearest pair cosine is ~2e-4 from the threshold and ~7e-6
+# from a 3-decimal rounding boundary, so the cross-engine hash is
+# float-safe.
 _PAIR_GATE_THRESHOLD = 0.3
-
-
-def pairs_above_threshold(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.8
-) -> DataFrame:
-    """All same-label vector pairs with cosine >= ``threshold`` —
-    blocked (label-partitioned) exact similarity join: the equi-key on
-    label keeps it from being all-pairs, the pattern for
-    attribute-blocked entity resolution."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _as_double("embedding").alias("v")
-    )
-    a = emb.select(
-        F.col("vec_id").alias("vec_a"), F.col("label").alias("la"), F.col("v").alias("va")
-    ).withColumn("na", norm("va"))
-    b = emb.select(
-        F.col("vec_id").alias("vec_b"), F.col("label").alias("lb"), F.col("v").alias("vb")
-    ).withColumn("nb", norm("vb"))
-    return (
-        a.join(b, (F.col("la") == F.col("lb")) & (F.col("vec_a") < F.col("vec_b")))
-        .withColumn("cos", cosine_pre("va", "vb", "na", "nb"))
-        .filter(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b", F.round("cos", 3).alias("cosine"))
-    )
 
 
 @register(
@@ -414,9 +391,25 @@ def pairs_above_threshold(
     tags=("similarity", "join"),
 )
 def similarity_pairs_above_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate entry for :func:`pairs_above_threshold` at the non-vacuous
-    gate threshold (see ``_PAIR_GATE_THRESHOLD``)."""
-    return pairs_above_threshold(spark, sf_dir, threshold=_PAIR_GATE_THRESHOLD)
+    """All same-label vector pairs with cosine >= ``_PAIR_GATE_THRESHOLD``
+    — blocked (label-partitioned) exact similarity join: the equi-key
+    on label keeps it from being all-pairs, the pattern for
+    attribute-blocked entity resolution."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", _as_double("embedding").alias("v")
+    )
+    a = emb.select(
+        F.col("vec_id").alias("vec_a"), F.col("label").alias("la"), F.col("v").alias("va")
+    ).withColumn("na", norm("va"))
+    b = emb.select(
+        F.col("vec_id").alias("vec_b"), F.col("label").alias("lb"), F.col("v").alias("vb")
+    ).withColumn("nb", norm("vb"))
+    return (
+        a.join(b, (F.col("la") == F.col("lb")) & (F.col("vec_a") < F.col("vec_b")))
+        .withColumn("cos", cosine_pre("va", "vb", "na", "nb"))
+        .filter(F.col("cos") >= _PAIR_GATE_THRESHOLD)
+        .select("vec_a", "vec_b", F.round("cos", 3).alias("cosine"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -467,15 +460,15 @@ _IVF_ORACLE = f"""
 """
 
 
-def _ivf_topk(emb: DataFrame, cent: DataFrame, nprobe: int = _IVF_NPROBE) -> DataFrame:
+def _ivf_topk(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """Shared IVF machinery over any centroid set: assign every corpus
     vector to its nearest centroid (cosine argmax as one max_by hash
-    aggregate), probe each query's ``nprobe`` nearest centroid lists,
+    aggregate), probe each query's ``_IVF_NPROBE`` nearest centroid lists,
     score exactly within them, and return per-query top-k.
 
     100 TB shape: assignment is a map-only pass against broadcast
     centroids (one row out per vector); the candidate join shuffles on
-    cent_id — |corpus|/K rows per list, nprobe lists per query — so
+    cent_id — |corpus|/K rows per list, _IVF_NPROBE lists per query — so
     cost scales with probed-list size, not corpus size. AQE splits any
     hot centroid list. Norms are hoisted into per-row columns once
     (``cosine_pre``) instead of being recomputed per centroid pair."""
@@ -510,7 +503,7 @@ def _ivf_topk(emb: DataFrame, cent: DataFrame, nprobe: int = _IVF_NPROBE) -> Dat
         )
 
     assign = nearest_centroids(emb_n, "vec_id", "v", "vn", 1)
-    # probes: |queries| x nprobe rows — tiny; the window form is fine
+    # probes: |queries| x _IVF_NPROBE rows — tiny; the window form is fine
     probe = nearest_centroids(
         emb_n.filter(F.col("vec_id") < _N_QUERIES).select(
             F.col("vec_id").alias("query_id"),
@@ -520,7 +513,7 @@ def _ivf_topk(emb: DataFrame, cent: DataFrame, nprobe: int = _IVF_NPROBE) -> Dat
         "query_id",
         "qv",
         "qn",
-        nprobe,
+        _IVF_NPROBE,
     )
     scored = (
         probe.join(assign, "cent_id")
@@ -563,10 +556,10 @@ _LLOYD_ITERS = 5
 _LLOYD_Q = "1e4"  # q4 component quantization, the PQ-oracle scale
 
 
-def lloyd_centroids(emb: DataFrame, k: int = _IVF_K, iters: int = _LLOYD_ITERS) -> DataFrame:
+def lloyd_centroids(emb: DataFrame) -> DataFrame:
     """Coarse centroids from a deterministic distributed k-means: the
-    first ``k`` corpus vectors seed Lloyd's algorithm for a fixed
-    ``iters`` rounds, entirely in integer-quantized space (components
+    first ``_IVF_K`` corpus vectors seed Lloyd's algorithm for a fixed
+    ``_LLOYD_ITERS`` rounds, entirely in integer-quantized space (components
     to round(x * 1e4) as BIGINT) so every step — squared-L2 argmin
     assignment (ties to the lowest cent_id) and the floor-of-mean
     centroid update — is exact, order-independent integer arithmetic
@@ -597,12 +590,12 @@ def lloyd_centroids(emb: DataFrame, k: int = _IVF_K, iters: int = _LLOYD_ITERS) 
     )
     cents = [
         (int(r.vec_id), [int(q) for q in r.qv])
-        for r in qcorpus.filter(F.col("vec_id") < k).collect()
+        for r in qcorpus.filter(F.col("vec_id") < _IVF_K).collect()
     ]
     d2 = F.expr(
         "aggregate(zip_with(qv, qc, (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
     )
-    for _ in range(iters):
+    for _ in range(_LLOYD_ITERS):
         cent_df = spark.createDataFrame(cents, "cent_id long, qc array<bigint>")
         assign = (
             qcorpus.crossJoin(F.broadcast(cent_df))
@@ -1323,7 +1316,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     centrality and `dedup_connected_components`' reachability).
 
     Scale shape: edges are the label-blocked threshold pairs (the
-    `pairs_above_threshold` discipline — an equi-key join on label,
+    `similarity_pairs_above_threshold` discipline — an equi-key join on label,
     never all-pairs ACROSS labels; within a label it is the exact
     scoring tier, O((n/L)^2) by design — `graph_triangle_count_lsh`
     is the 100 TB variant whose edge relation comes from the adaptive

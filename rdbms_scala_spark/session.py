@@ -31,6 +31,8 @@ from typing import TypeVar
 
 from pyspark.sql import SparkSession
 
+from rdbms_scala_spark.catalog import table_fingerprint
+
 T = TypeVar("T")
 
 
@@ -140,31 +142,6 @@ _COUNTS = {"hits": 0, "misses": 0, "build_s": 0.0}
 _LOCK = threading.Lock()  # guards _RELATIONS and _COUNTS, never a build
 
 
-def _table_fingerprint(sf_dir: str, *names: str) -> str:
-    """Cheap driver-side modification fingerprint of parquet tables:
-    (path, size, mtime_ns) of every data file under them, hashed.
-    Detects a table overwritten under the same path without reading
-    any data."""
-    import hashlib
-
-    parts: list[str] = []
-    for name in names:
-        root = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(root):
-            for dirpath, _dirs, files in os.walk(root):
-                for f in files:
-                    p = os.path.join(dirpath, f)
-                    st = os.stat(p)
-                    parts.append(f"{p}|{st.st_size}|{st.st_mtime_ns}")
-        elif os.path.exists(root):
-            st = os.stat(root)
-            parts.append(f"{root}|{st.st_size}|{st.st_mtime_ns}")
-    # os.walk's order is filesystem-dependent: sort so an identical
-    # on-disk table always fingerprints the same.
-    parts.sort()
-    return hashlib.md5("\n".join(parts).encode()).hexdigest()
-
-
 def _checkpoint_rdd(df):
     """The JVM RDD holding a localCheckpoint DataFrame's blocks (the
     RDD its ``LogicalRDD`` scans), or None when ``df`` is not a
@@ -245,13 +222,13 @@ def session_relation(
     fingerprint (sizes + mtimes) of ``table`` under ``sf_dir`` is
     unchanged. Overwriting the table under the same path rebuilds the
     entry, and the superseded value's checkpoints are unpersisted
-    first. Whoever rewrites a table in place also calls
-    ``catalog.clear_table_memo()`` so the rebuild scans the new files.
-    Inserting an entry drops every entry of an earlier application (at
-    most one live application per process, as in ``session_clone``)."""
+    first; the rebuild's ``catalog.load_table`` scans the new files
+    under the same rule. Inserting an entry drops every entry of an
+    earlier application (at most one live application per process, as
+    in ``session_clone``)."""
     app = spark.sparkContext.applicationId
     key = (app, kind, sf_dir.rstrip("/"), params)
-    fp = _table_fingerprint(sf_dir, *((table,) if isinstance(table, str) else table))
+    fp = table_fingerprint(sf_dir, *((table,) if isinstance(table, str) else table))
     with _LOCK:
         hit = _RELATIONS.get(key)
         if hit is not None and hit[0] == fp:

@@ -18,24 +18,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def load_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str,
-    delimiter: str = "|",
-    header: bool = False,
-    date_format: str = "yyyy-MM-dd",
-) -> DataFrame:
+def load_csv(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
     """Reference-compatible CSV scan: declared schema (never inferred
     — inference is a full extra pass at 100 TB), pipe delimiter,
     headerless, `yyyy-MM-dd` dates (Microbase.scala:937-940's epoch-day
-    parse). Lazy: no data is read until an action, unlike the
-    reference's eager CREATE TABLE load."""
+    parse) — the one format the reference's CREATE TABLE reads. Lazy:
+    no data is read until an action, unlike the reference's eager
+    CREATE TABLE load."""
     return (
         spark.read.schema(schema)
-        .option("sep", delimiter)
-        .option("header", str(header).lower())
-        .option("dateFormat", date_format)
+        .option("sep", "|")
+        .option("header", "false")
+        .option("dateFormat", "yyyy-MM-dd")
         .csv(path)
     )
 
@@ -54,13 +48,12 @@ def write_parquet(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Columnar sink. `partition_by` produces the directory layout that
-    gives downstream scans partition pruning — the scale analog of the
-    reference's tree index (range predicates skip whole directories,
-    then row-groups)."""
-    w = df.write.mode(mode)
+    """Columnar sink, overwriting ``path``. `partition_by` produces the
+    directory layout that gives downstream scans partition pruning —
+    the scale analog of the reference's tree index (range predicates
+    skip whole directories, then row-groups)."""
+    w = df.write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
@@ -72,13 +65,12 @@ def write_bucketed_table(
     bucket_by: list[str],
     num_buckets: int = 32,
     sort_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Bucketed + sorted managed table: joins/aggregations on the
-    bucket key skip the shuffle entirely (co-located partitions) —
-    the scale analog of the reference's hash index
-    (Microbase.scala:994-1006), but persistent and distributed."""
-    w = df.write.mode(mode).bucketBy(num_buckets, *bucket_by)
+    """Bucketed + sorted managed table, overwriting ``name``:
+    joins/aggregations on the bucket key skip the shuffle entirely
+    (co-located partitions) — the scale analog of the reference's hash
+    index (Microbase.scala:994-1006), but persistent and distributed."""
+    w = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_by)
     if sort_by:
         w = w.sortBy(*sort_by)
     w.saveAsTable(name)
@@ -90,9 +82,9 @@ def write_sorted_table(
     sort_by: list[str],
     num_files: int = 8,
     row_group_bytes: int = 1 << 20,
-    mode: str = "overwrite",
 ) -> None:
-    """Range-partitioned, globally sorted Parquet layout — the
+    """Range-partitioned, globally sorted Parquet layout, overwriting
+    ``path`` — the
     persistent analog of the reference's TREE index
     (Microbase.scala:1009-1024): where the reference builds an
     in-heap sorted array per indexed column for range scans, at 100 TB
@@ -109,23 +101,17 @@ def write_sorted_table(
     (
         df.repartitionByRange(num_files, *sort_by)
         .sortWithinPartitions(*sort_by)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("parquet.block.size", row_group_bytes)
         .parquet(path)
     )
 
 
-def write_csv(
-    df: DataFrame, path: str, delimiter: str = "|", header: bool = False, mode: str = "overwrite"
-) -> None:
-    """Pipe-delimited CSV sink mirroring the reference's stdout format
-    (Microbase.scala:1070-1088), as distributed files."""
-    (
-        df.write.mode(mode)
-        .option("sep", delimiter)
-        .option("header", str(header).lower())
-        .csv(path)
-    )
+def write_csv(df: DataFrame, path: str) -> None:
+    """Pipe-delimited headerless CSV sink mirroring the reference's
+    stdout format (Microbase.scala:1070-1088), as distributed files,
+    overwriting ``path``."""
+    df.write.mode("overwrite").option("sep", "|").option("header", "false").csv(path)
 
 
 # ---------------------------------------------------------------------------
@@ -194,8 +180,8 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
     scratch = _scratch_dir(spark, sf_dir, "csv_roundtrip")
-    write_csv(nation, scratch, delimiter="|", header=False)
-    df = load_csv(spark, scratch, schema=nation.schema, delimiter="|")
+    write_csv(nation, scratch)
+    df = load_csv(spark, scratch, schema=nation.schema)
     return df.select("n_nationkey", "n_name", "n_regionkey").orderBy("n_nationkey")
 
 
@@ -420,21 +406,21 @@ def _bucket_expr(col, bounds: list[float]):
     return rec(0, len(bounds))
 
 
+_ZORDER_BITS = 8  # quantile-rank bits per z-column
+
+
 def write_zordered_table(
     df: DataFrame,
     path: str,
     zorder_by: list[str],
     num_files: int = 16,
     row_group_bytes: int = 128 * 1024,
-    bits: int = 8,
-    rel_err: float = 0.001,
-    mode: str = "overwrite",
 ) -> None:
-    """Z-order (Morton-curve) clustered Parquet layout — the
-    MULTI-dimensional layout lever. ``write_sorted_table`` serves
-    range predicates on ONE column; a workload that filters sometimes
-    on user, sometimes on value, sometimes on both would need one
-    sorted copy per column. Interleaving the bits of each column's
+    """Z-order (Morton-curve) clustered Parquet layout, overwriting
+    ``path`` — the MULTI-dimensional layout lever.
+    ``write_sorted_table`` serves range predicates on ONE column; a
+    workload that filters sometimes on user, sometimes on value,
+    sometimes on both would need one sorted copy per column. Interleaving the bits of each column's
     QUANTILE RANK into a single Morton code and range-writing on that
     code gives every file/row-group a narrow min/max window in EVERY
     z-column at once, so Parquet footer stats prune on any of them
@@ -443,10 +429,10 @@ def write_zordered_table(
     where a single-column sort reads 100%).
 
     Scale shape: one ``approxQuantile`` pass per z-column (GK sketch,
-    driver gets ``2^bits`` boundaries — the same sampling contract as
-    ``repartitionByRange``'s partitioner), then a map-only bucket
-    lookup (balanced CASE tree, ``bits`` comparisons/row, codegen'd)
-    + bit-interleave, then ONE range shuffle on the z-code. Quantile
+    driver gets ``2^_ZORDER_BITS`` boundaries, at relative error
+    0.001 — the same sampling contract as ``repartitionByRange``'s
+    partitioner), then a map-only bucket lookup (balanced CASE tree,
+    ``_ZORDER_BITS`` comparisons/row, codegen'd) + bit-interleave, then ONE range shuffle on the z-code. Quantile
     (not min/max) quantization matters: skewed columns — events.value
     is exponential-ish — would otherwise spend most code space on the
     thin tail and cluster nothing. At 100 TB this is the OPTIMIZE
@@ -459,17 +445,17 @@ def write_zordered_table(
         "write_zordered_table reserves column name '__z' for the "
         "interleaved code; rename the input column"
     )
-    qs = [i / (1 << bits) for i in range(1, 1 << bits)]
+    qs = [i / (1 << _ZORDER_BITS) for i in range(1, 1 << _ZORDER_BITS)]
     z = None
     for i, c in enumerate(zorder_by):
-        bounds = df.stat.approxQuantile(c, qs, rel_err)
+        bounds = df.stat.approxQuantile(c, qs, 0.001)
         uniq: list[float] = []
         for b in bounds:  # heavy ties produce duplicate boundaries
             if not uniq or b > uniq[-1]:
                 uniq.append(b)
         s = _morton_spread(
             _bucket_expr(F.col(c).cast("double"), uniq).cast("bigint"),
-            bits,
+            _ZORDER_BITS,
             len(zorder_by),
         )
         z = s if z is None else z.bitwiseOR(F.shiftleft(s, i))
@@ -478,7 +464,7 @@ def write_zordered_table(
         .repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("parquet.block.size", row_group_bytes)
         .parquet(path)
     )

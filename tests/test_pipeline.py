@@ -558,29 +558,15 @@ def test_minhash_band_bucket_purge_bounds_mass_dup_cluster(spark):
     assert all(p[0] >= 1000 for p in pairs), f"mass cluster leaked {len(pairs)} pairs"
 
 
-def test_purge_oversized_buckets_dataframe_cap(spark):
-    """The 1-row-DataFrame cap form (the occupancy-relative-cap
-    contract; SimHash now applies the same cap via
-    expand_bucket_pairs' keep predicate) must agree with the
-    equivalent absolute cap on the same frame: with cap =
-    greatest(3, n_total div 4) = 3, a 10-row bucket is purged while
-    2-row buckets survive."""
-    from pyspark.sql import functions as SF
-
+def test_purge_oversized_buckets_int_cap(spark):
+    """With cap 3, a 10-row bucket is purged while the 2-row and 1-row
+    buckets survive."""
     rows = [("a", i) for i in range(10)] + [("b", 1), ("b", 2), ("c", 1)]
     df = spark.createDataFrame(rows, "k string, v long")
-    cap_df = df.agg(
-        SF.greatest(SF.lit(3), SF.expr("count(1) div 4")).alias("__cap")
-    )
-    got_df = sorted(
-        (r.k, r.v)
-        for r in dedup.purge_oversized_buckets(df, ["k"], cap_df).collect()
-    )
     got_int = sorted(
         (r.k, r.v) for r in dedup.purge_oversized_buckets(df, ["k"], 3).collect()
     )
-    assert got_df == [("b", 1), ("b", 2), ("c", 1)]
-    assert got_df == got_int
+    assert got_int == [("b", 1), ("b", 2), ("c", 1)]
 
 
 def test_merge_upsert_row_fates_and_broadcast(spark):
@@ -1574,11 +1560,9 @@ def sf_copy(tmp_path):
 
 
 def _rewrite(sf_dir: str, name: str, fn) -> None:
-    """Overwrite ``name``'s parquet file in place with ``fn(table)`` and
-    drop the memoized scans, as an in-place rewriter must."""
+    """Overwrite ``name``'s parquet file in place with ``fn(table)``."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     pq.write_table(fn(pq.read_table(path)), path)
-    catalog.clear_table_memo()
 
 
 def _checkpoint_rdd_id(df) -> int:
@@ -1694,6 +1678,28 @@ def test_rewritten_documents_rebuild_minhash_and_free_old_checkpoint(spark, sf_c
     assert sig2 is not sig and cand2 is not cand
     assert 0 < sig2.count() < n_docs
     assert not old_ids & _persisted_rdd_ids(spark)
+
+
+def test_rewritten_spark_directory_rescans_table(spark, tmp_path):
+    """A table Spark overwrites in place gets new part files and loses
+    the old ones. The rebuild after the rewrite must scan the new
+    listing, not a memoized scan of the deleted files, with no call
+    to clear the memo."""
+    sf = str(tmp_path / "sf")
+    path = catalog.table_path(sf, "documents")
+    spark.read.parquet(catalog.table_path(_SF_TINY, "documents")).write.parquet(path)
+    sig, _ = dedup.cached_minhash_sig_cand(spark, sf)
+    n_docs = sig.count()
+    assert n_docs > 0
+
+    src = spark.read.parquet(path)
+    subset = src.collect()[: n_docs // 2]  # a driver-side copy
+    spark.createDataFrame(subset, src.schema).write.mode("overwrite").parquet(path)
+    sig2, _ = dedup.cached_minhash_sig_cand(spark, sf)
+    assert sig2 is not sig
+    assert sig2.count() == len(subset)
+    exact = dedup.dedup_exact_docs(spark, sf)
+    assert exact.agg(F.sum("n_copies")).first()[0] == len(subset)
 
 
 def test_rewritten_embeddings_give_fresh_pq_codes(spark, sf_copy):
