@@ -607,25 +607,81 @@ def test_merge_upsert_row_fates_and_broadcast(spark):
 
 def test_snapshot_store_time_travel_and_atomic_manifest(spark, tmp_path):
     """SnapshotStore: versions are immutable and manifest-resolved —
-    v0 reads identically after v1 commits; missing versions raise; a
-    leftover tmp manifest (simulated crash mid-publish) is invisible
-    to readers."""
+    v0 reads identically after v1 commits; the manifest pins the
+    schema, so a read launches no Spark job and returns the schema a
+    footer inference would (every column nullable, as Spark makes any
+    file-source schema); missing versions raise; a leftover tmp
+    manifest (simulated crash mid-publish) is invisible to readers."""
+    import datetime as dt
+    from decimal import Decimal
+
     import pytest as _pytest
 
     from rdbms_scala_spark.pipeline.snapshot import SnapshotStore
 
+    schema = (
+        "k bigint not null, s string, i int not null, d date, ts timestamp, "
+        "ntz timestamp_ntz, amt decimal(12,2), tags array<string>, "
+        "pt struct<x: int, y: string>, attrs map<string, bigint>"
+    )
+
+    def row(k, s):
+        return (
+            k, s, k * 10, dt.date(2024, 1, k), dt.datetime(2024, 1, k, 12, 30),
+            dt.datetime(2024, 2, k, 8, 0), Decimal(f"{k}.25"), [s, "t"],
+            (k, s), {s: k},
+        )
+
     store = SnapshotStore(spark, str(tmp_path / "store"))
     assert store.versions() == []
-    v0 = store.commit(spark.createDataFrame([(1, "a"), (2, "b")], "k long, s string"))
-    v1 = store.commit(spark.createDataFrame([(1, "a"), (2, "B"), (3, "c")], "k long, s string"))
+    v0 = store.commit(spark.createDataFrame([row(1, "a"), row(2, "b")], schema))
+    v1 = store.commit(spark.createDataFrame([row(1, "a"), row(2, "B"), row(3, "c")], schema))
     assert (v0, v1) == (0, 1)
     assert {(r.k, r.s) for r in store.read(0).collect()} == {(1, "a"), (2, "b")}
-    assert {(r.k, r.s) for r in store.read(1).collect()} == {(1, "a"), (2, "B"), (3, "c")}
+    assert sorted(store.read(1).collect()) == [row(1, "a"), row(2, "B"), row(3, "c")]
+    sc = spark.sparkContext
+    for v in (v0, v1):
+        group = f"snapshot_read_{v}"
+        sc.setJobGroup(group, "SnapshotStore.read")
+        try:
+            df = store.read(v)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert df.schema == spark.read.parquet(str(tmp_path / "store" / f"v{v}")).schema
     # crash mid-publish: tmp manifest present, rename never happened
     (tmp_path / "store" / "_manifest" / ".2.json.tmp").write_text("{}")
     assert store.versions() == [0, 1]
     with _pytest.raises(ValueError, match="version 5"):
         store.read(5)
+
+
+def test_snapshot_read_is_pinned_to_manifest_files(spark, tmp_path):
+    """A version's rows are exactly the files its manifest names: a
+    part file copied into the published version dir afterwards is not
+    read, and a listed file that has gone missing fails the read
+    rather than silently dropping its rows."""
+    import os
+    import shutil
+
+    import pytest as _pytest
+
+    from rdbms_scala_spark.pipeline.snapshot import SnapshotStore
+
+    store = SnapshotStore(spark, str(tmp_path / "store"))
+    v = store.commit(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k long, s string"))
+    vdir = os.path.join(store.root, f"v{v}")
+    parts = sorted(
+        (os.path.join(vdir, f) for f in os.listdir(vdir) if f.endswith(".parquet")),
+        key=os.path.getsize,
+    )
+    shutil.copy(parts[-1], os.path.join(vdir, "part-99999-late.snappy.parquet"))
+    assert spark.read.parquet(vdir).count() > 3  # a directory listing sees the copy
+    assert sorted((r.k, r.s) for r in store.read(v).collect()) == [(1, "a"), (2, "b"), (3, "c")]
+    os.remove(parts[-1])
+    with _pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        store.read(v).collect()
 
 
 def _write_clustered_embeddings(tmp_path):
