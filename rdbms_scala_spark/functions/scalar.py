@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
+from rdbms_scala_spark.pipeline.dedup import tokens_sql
 from rdbms_scala_spark.registry import register
 
 
@@ -188,10 +189,10 @@ def functions_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "functions_array",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+               {tokens_sql('text')} AS t
         FROM documents WHERE doc_id < 200
     )
     SELECT doc_id,

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
+from rdbms_scala_spark.pipeline.dedup import tokens_sql
 from rdbms_scala_spark.registry import register
 
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
@@ -81,10 +82,10 @@ def pivot_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "explode_token_counts",
-    oracle="""
+    oracle=f"""
     SELECT token, count(*) AS n
     FROM (
-        SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+        SELECT unnest({tokens_sql('text')}) AS token
         FROM documents
     )
     GROUP BY token

@@ -28,7 +28,18 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
-from rdbms_scala_spark.pipeline.dedup import _contam_sh_chain
+from rdbms_scala_spark.pipeline.dedup import (
+    TOKS_CTE,
+    _contam_sh_chain,
+    _substring_spans_cte,
+    contamination_hot_shingles,
+    contamination_shingles,
+    shingles_df,
+    substring_doc_tokens,
+    substring_spans,
+    tokens,
+    tokens_sql,
+)
 from rdbms_scala_spark.registry import register
 from rdbms_scala_spark.session import session_relation
 
@@ -120,7 +131,7 @@ def text_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH toks AS (
         SELECT doc_id,
                CAST(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS VARCHAR) AS hx,
-               len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens
+               len({tokens_sql('text')}) AS n_tokens
         FROM documents
     ),
     sharded AS (
@@ -160,8 +171,6 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — NO global single-reducer sort; per-reducer work is
     |corpus|/shards and shards scale with ingest workers. Token count
     is the whitespace tokenizer shared with text_token_count."""
-    from rdbms_scala_spark.pipeline.dedup import tokens
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hx = F.substring(F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8")), 1, 1)
     sharded = docs.select(
@@ -333,7 +342,7 @@ _PACK_CTX_LEVELS = (128, 256, 512, 1024)
     WITH toks AS (
         SELECT doc_id,
                CAST(substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS VARCHAR) AS hx,
-               len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens
+               len({tokens_sql('text')}) AS n_tokens
         FROM documents
     ),
     sharded AS (
@@ -398,8 +407,6 @@ def pipeline_pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFram
     each ctx level is pure per-row arithmetic on (cum_before,
     n_tokens) — a 4x fan-out over already-tiny columns, not 4
     repacks."""
-    from rdbms_scala_spark.pipeline.dedup import tokens
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hx = F.substring(F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8")), 1, 1)
     sharded = docs.select(
@@ -480,8 +487,6 @@ def pipeline_pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _decontamination_report_oracle() -> str:
-    from rdbms_scala_spark.pipeline.dedup import _substring_spans_cte
-
     return f"""
     WITH {_substring_spans_cte()},
     {_contam_sh_chain()},
@@ -584,12 +589,6 @@ def pipeline_decontamination_report(
     the final rollup is a 3-key aggregate. The report is exactly the
     manifest pattern of `pipeline_training_manifest` pointed at
     hygiene instead of packing."""
-    from rdbms_scala_spark.pipeline.dedup import (
-        contamination_shingles,
-        substring_doc_tokens,
-        substring_spans,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     fpc = F.md5(F.lower(F.trim(F.col("text"))))
     first = F.substring(F.md5(F.concat(F.lit("split:"), fpc)), 1, 1)
@@ -754,8 +753,6 @@ def _decontam_bench_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the static eval-suite slice — a filter over the family's
     session-cached shingle relation (cheap per call; the broadcast
     that consumes it is delta-sized work)."""
-    from rdbms_scala_spark.pipeline.dedup import contamination_shingles
-
     return (
         contamination_shingles(spark, sf_dir)
         .filter(F.col("doc_id") % 29 == 0)
@@ -793,8 +790,6 @@ def _v0_standing_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta work is batch-sized, the standing report is not). It is
     also consumed twice per call (the f0 count and the flag-removal
     join), so materialization halves even the first call's cost."""
-    from rdbms_scala_spark.pipeline.dedup import contamination_shingles
-
     def build() -> DataFrame:
         train0 = contamination_shingles(spark, sf_dir).filter(
             F.col("doc_id") % 29 != 0
@@ -836,10 +831,7 @@ def _decontam_incremental_oracle() -> str:
         UNION ALL
         SELECT doc_id, text FROM ins
     ),
-    toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    {TOKS_CTE},
     {_contam_sh_chain()},
     bench AS (
         SELECT doc_id AS bench_doc_id, shingle FROM sh WHERE doc_id % 29 = 0
@@ -851,7 +843,7 @@ def _decontam_incremental_oracle() -> str:
             GROUP BY t.doc_id, b.bench_doc_id HAVING count(*) >= 3) q
     ),
     v1toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+        SELECT doc_id, {tokens_sql('text')} AS t
         FROM v1train
     ),
     v1sh_all AS (
@@ -939,11 +931,6 @@ def pipeline_decontamination_incremental(
     relations; the merge is five 1-row aggregates cross-joined. The
     steady-state cost is therefore batch-proportional, never a corpus
     re-scan."""
-    from rdbms_scala_spark.pipeline.dedup import (
-        contamination_hot_shingles,
-        shingles_df,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     is_bench = F.col("doc_id") % 29 == 0
     cdc = _decontam_cdc(spark, sf_dir)

@@ -21,7 +21,9 @@ Four tiers, by cost/recall tradeoff at 100 TB:
   purged like the LSH band buckets.
 
 All tokenization is lower(trim(text)) split on whitespace so the
-DuckDB oracles can reproduce it exactly.
+DuckDB oracles can reproduce it exactly: ``tokens()`` writes it for
+Spark and ``tokens_sql()`` for DuckDB, and every oracle in the package
+embeds that one DuckDB text.
 """
 
 from __future__ import annotations
@@ -40,17 +42,50 @@ from rdbms_scala_spark.session import materialize, session_relation
 
 def tokens():
     """Whitespace tokens of the lower-cased trimmed ``text`` column
-    (matches DuckDB regexp_split_to_array(lower(trim(..)), '\\s+'))."""
+    (matches DuckDB regexp_split_to_array(lower(trim(..)), '\\s+'),
+    which every oracle embeds through ``tokens_sql``)."""
     return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+
+
+def tokens_sql(col: str) -> str:
+    """The DuckDB text of ``tokens()`` over the column ``col``."""
+    return f"regexp_split_to_array(lower(trim({col})), '\\s+')"
+
+
+# The oracles' ``toks(doc_id, t)`` CTE: each document's token array.
+TOKS_CTE = f"""toks AS (
+        SELECT doc_id, {tokens_sql('text')} AS t
+        FROM documents
+    )"""
+
+
+# ``toks`` and ``idx(doc_id, t, i)``: one row per word trigram, starting
+# at token ``i`` of ``t``.
+TRIGRAM_IDX_CTES = f"""{TOKS_CTE},
+    idx AS (
+        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
+        FROM toks WHERE len(t) >= 3
+    )"""
+
+
+def trigram_ctes(sh: str) -> str:
+    """The DuckDB text of ``shingles_df(docs, n=3)``: the
+    ``TRIGRAM_IDX_CTES`` and ``{sh}(doc_id, shingle)``, each
+    document's distinct word trigrams."""
+    return f"""{TRIGRAM_IDX_CTES},
+    {sh} AS MATERIALIZED (
+        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
+        FROM idx
+    )"""
 
 
 def shingles_df(docs: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) word n-grams per doc.
 
-    ``distinct=False`` skips the dedup shuffle — correct for consumers
-    that are duplicate-insensitive (MinHash: min over repeated values
-    is unchanged; SimHash: vote weights become term-frequency weighted,
-    which is standard)."""
+    ``distinct=False`` keeps every occurrence and skips the dedup
+    shuffle; it serves corpus-wide counts (``text_ngram_topk``).
+    Per-document consumers read the distinct relation, session-cached
+    as ``cached_doc_shingles``."""
     t = docs.select("doc_id", tokens().alias("t")).filter(F.size("t") >= n)
     sh = t.select(
         "doc_id",
@@ -175,12 +210,14 @@ def expand_bucket_pairs(df, keys, payload, keep, attach=None):
     ).select("p.*")
 
 
-def pairwise_jaccard(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
-    """Exact Jaccard for every doc pair sharing >=1 shingle, via the
-    inverted-index self-join (never a full cross product). Shingles
-    with document frequency > ``max_df`` are dropped from BOTH the
-    index and the per-doc sizes (Jaccard stays consistent over the
-    capped shingle space) — see ``cap_shingle_df``."""
+def _shingle_overlap(sh: DataFrame, max_df: int) -> DataFrame:
+    """(doc_a, doc_b, n_inter, na, nb) for every doc_a < doc_b pair
+    sharing >=1 shingle: the shared-shingle count from the
+    inverted-index self-join (never a full cross product) and both
+    docs' shingle counts. Shingles with document frequency >
+    ``max_df`` are dropped from BOTH the index and the per-doc sizes,
+    so every score over them stays consistent over the capped shingle
+    space (see ``cap_shingle_df``)."""
     sh = cap_shingle_df(sh, max_df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
@@ -192,14 +229,16 @@ def pairwise_jaccard(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))).alias("jaccard"),
-        )
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def pairwise_jaccard(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
+    """Exact Jaccard for every doc pair sharing >=1 shingle over the
+    df-capped shingle space (see ``_shingle_overlap``)."""
+    return _shingle_overlap(sh, max_df).select(
+        "doc_a",
+        "doc_b",
+        (F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))).alias("jaccard"),
     )
 
 
@@ -233,36 +272,32 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 2. exact n-gram Jaccard near-dup (correctness anchor)
 
-def _jaccard_pairs_sql(max_df: int) -> str:
-    """Trigram-Jaccard >=0.7 pair derivation in DuckDB SQL, with the
-    shingle-df cap MIRRORED from :func:`pairwise_jaccard` (dropped
-    from both the inverted index and the per-doc sizes) so oracle and
+def _overlap_ctes(max_df: int) -> str:
+    """The DuckDB text of :func:`_shingle_overlap`: trigram CTEs
+    ending in ``sh`` (capped at ``max_df`` like the Spark side, dropped
+    from both the inverted index and the per-doc sizes), ``sz(doc_id,
+    n_sh)`` and ``inter(doc_a, doc_b, n_inter)``, so oracle and
     implementation stay equivalent by construction at ANY corpus
-    scale — not just ones where the cap happens not to bind."""
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh0 AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
+    scale, not just ones where the cap happens not to bind."""
+    return f"""{trigram_ctes('sh0')},
     sdf AS (SELECT shingle, count(*) AS df FROM sh0 GROUP BY shingle),
-    sh AS (
+    sh AS MATERIALIZED (
         SELECT s.doc_id, s.shingle
         FROM sh0 s JOIN sdf d USING (shingle) WHERE d.df <= {max_df}
     ),
-    sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
+    sz AS MATERIALIZED (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
     inter AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    )
+    )"""
+
+
+def _jaccard_pairs_sql(max_df: int) -> str:
+    """Trigram-Jaccard >=0.7 pairs in DuckDB SQL, the oracle of
+    :func:`pairwise_jaccard` under the 0.7 threshold."""
+    return f"""
+    WITH {_overlap_ctes(max_df)}
     SELECT doc_a, doc_b,
            round(n_inter * 1.0 / (x.n_sh + y.n_sh - n_inter), 4) AS jaccard
     FROM inter
@@ -276,29 +311,7 @@ _JACCARD_ORACLE = _jaccard_pairs_sql(MAX_SHINGLE_DF)
 
 
 _CONTAINMENT_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh0 AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
-    sdf AS (SELECT shingle, count(*) AS df FROM sh0 GROUP BY shingle),
-    sh AS (
-        SELECT s.doc_id, s.shingle
-        FROM sh0 s JOIN sdf d USING (shingle) WHERE d.df <= {MAX_SHINGLE_DF}
-    ),
-    sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {_overlap_ctes(MAX_SHINGLE_DF)}
     SELECT doc_a, doc_b, CAST(n_inter AS BIGINT) AS n_inter,
            round(n_inter * 1.0 / least(x.n_sh, y.n_sh), 4) AS containment,
            round(n_inter * 1.0 / (x.n_sh + y.n_sh - n_inter), 4) AS jaccard
@@ -325,26 +338,13 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     per pair so the two tiers can be thresholded jointly.
 
     Same inverted-index self-join, df cap, and per-doc size relation
-    as `pairwise_jaccard` — the candidate machinery is shared; only
-    the scoring denominator changes. On this synthetic corpus the
-    generator makes full-copy near-dups only, so the tier coincides
-    with the Jaccard pairs; its value is the asymmetric case."""
+    as `pairwise_jaccard` (``_shingle_overlap``): the candidate
+    machinery is shared; only the scoring denominator changes. On this
+    synthetic corpus the generator makes full-copy near-dups only, so
+    the tier coincides with the Jaccard pairs; its value is the
+    asymmetric case."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = cap_shingle_df(shingles_df(docs, n=3), MAX_SHINGLE_DF)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    scored = inter.join(sa, "doc_a").join(sb, "doc_b")
+    scored = _shingle_overlap(shingles_df(docs, n=3), MAX_SHINGLE_DF)
     containment = F.col("n_inter") / F.least("na", "nb")
     jaccard = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
     return scored.filter(containment >= 0.9).select(
@@ -394,10 +394,13 @@ def cached_doc_shingles(
     spark: SparkSession, sf_dir: str, n: int = 3
 ) -> DataFrame:
     """The distinct (doc_id, shingle) relation, a session relation per
-    ``n`` — the shared input for iterative consumers that scan it
-    several times per call (``sample_coverage_greedy`` reads it ~2k
-    times for k greedy rounds; without the checkpoint every round
-    replays the tokenize + explode + distinct)."""
+    ``n``: a corpus job tokenizes and explodes its documents once. It
+    feeds the MinHash tier (``cached_minhash_sig_cand`` builds its
+    signatures from it), the calibration audit, the contamination
+    family, and iterative consumers that scan it several times per
+    call (``sample_coverage_greedy`` reads it ~2k times for k greedy
+    rounds; without the checkpoint every round replays the tokenize +
+    explode + distinct)."""
 
     def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
@@ -469,7 +472,7 @@ def cached_minhash_sig_cand(
 ) -> tuple[DataFrame, DataFrame]:
     """The (sig, cand) relations of the MinHash tier, one session
     relation shared by every query built on them — the signature
-    build (_NUM_PERM/4 md5 calls per shingle instance), the banded
+    build (_NUM_PERM/4 md5 calls per distinct shingle), the banded
     exchange and the signature verify join dominate each of those
     queries, and the session pays them once per corpus. At 100 TB the
     persisted analog is the signature/candidate tables every
@@ -483,10 +486,12 @@ def cached_minhash_sig_cand(
     ``n_match / _NUM_PERM`` is the pair's estimated Jaccard."""
 
     def build() -> tuple[DataFrame, DataFrame]:
-        docs = load_table(spark, sf_dir, "documents")
-        # cand derives from sig: without materializing sig first the
-        # signature pass would run twice
-        sig = materialize(minhash_signatures(shingles_df(docs, n=3, distinct=False)))
+        # The signatures read the session's distinct shingle relation
+        # (a min over distinct values equals the min over repeated
+        # ones), so the job derives its shingles once. cand derives
+        # from sig: without materializing sig first the signature pass
+        # would run twice.
+        sig = materialize(minhash_signatures(cached_doc_shingles(spark, sf_dir)))
         # The bucket cap purges mass duplicates before pair expansion:
         # a K-member duplicate cluster pairs QUADRATICALLY (K=10k ->
         # 50M pairs from one bucket); the absolute cap is sound because
@@ -534,28 +539,17 @@ def _minhash_sql(cand: bool = True) -> tuple[str, str]:
     matches = " + ".join(
         f"(CASE WHEN x.h{i} = y.h{i} THEN 1 ELSE 0 END)" for i in range(_NUM_PERM)
     )
-    ctes = f"""toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
-    sig AS (
+    ctes = f"""{trigram_ctes('sh')},
+    sig AS MATERIALIZED (
         SELECT doc_id, {', '.join(h)}
         FROM sh GROUP BY doc_id
     ),
-    bands_all AS (
+    bands_all AS MATERIALIZED (
         {' UNION ALL '.join(bands)}
     )"""
     if cand:
         ctes += f""",
-    bands AS (
+    bands AS MATERIALIZED (
         SELECT doc_id, band, band_hash FROM (
             SELECT bands_all.*,
                    count(*) OVER (PARTITION BY band, band_hash) AS bn
@@ -660,18 +654,7 @@ def _simhash_cand_oracle() -> str:
         ]
     )
     return f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
+    WITH {trigram_ctes('sh')},
     hashes AS (
         SELECT doc_id, md5('0:' || shingle) AS h0, md5('1:' || shingle) AS h1
         FROM sh
@@ -937,18 +920,27 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # 6. connected-components closure (iterative)
 
-_CC_ORACLE = f"""
-    WITH RECURSIVE pairs AS ({_JACCARD_ORACLE}),
-    edges AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs
+def closure_ctes(name: str, pairs: str) -> str:
+    """The DuckDB text of ``connected_components_edges`` up to its
+    labels: ``WITH RECURSIVE`` over the (doc_a, doc_b) pair query
+    ``pairs`` as ``{name}``, then ``edges(u, v)`` in both orientations
+    and ``reach(u, v)``, every node ``u`` with each node it reaches.
+    A component's label is ``least(u, min(v))`` over ``reach``."""
+    return f"""WITH RECURSIVE {name} AS MATERIALIZED ({pairs}),
+    edges AS MATERIALIZED (
+        SELECT doc_a AS u, doc_b AS v FROM {name}
         UNION
-        SELECT doc_b AS u, doc_a AS v FROM pairs
+        SELECT doc_b AS u, doc_a AS v FROM {name}
     ),
     reach(u, v) AS (
         SELECT u, v FROM edges
         UNION
         SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
+    )"""
+
+
+_CC_ORACLE = f"""
+    {closure_ctes('pairs', _JACCARD_ORACLE)}
     SELECT u AS doc_id, least(u, min(v)) AS component_id
     FROM reach
     GROUP BY u
@@ -1073,17 +1065,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_minhash_clusters",
     oracle=f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    edges AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs
-        UNION
-        SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
+    {closure_ctes('pairs', _minhash_oracle())},
     comp AS (
         SELECT u AS doc_id, least(u, min(v)) AS cluster_id
         FROM reach GROUP BY u
@@ -1426,10 +1408,7 @@ def _contamination_check_oracle() -> str:
     and verify the capped semantics where the cap actually BINDS
     (it is non-binding at the sf0.01 driver gate by design)."""
     return f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    WITH {TOKS_CTE},
     {_contam_sh_chain()},
     bench AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 29 = 0),
     train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 29 <> 0),
@@ -2002,17 +1981,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_survivors_weighted",
     oracle=f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    edges AS (
-        SELECT doc_a AS u, doc_b AS v FROM pairs
-        UNION
-        SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    ),
+    {closure_ctes('pairs', _minhash_oracle())},
     comp AS (
         SELECT u AS doc_id, least(u, min(v)) AS cluster_id
         FROM reach GROUP BY u
@@ -2091,9 +2060,9 @@ _SPAN_TOKENS = 10
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS l
+               {tokens_sql('text')} AS l
         FROM documents
-        WHERE len(regexp_split_to_array(lower(trim(text)), '\\s+'))
+        WHERE len({tokens_sql('text')})
               >= {_SPAN_TOKENS}
     ),
     chunks AS (
@@ -2193,10 +2162,7 @@ def _substring_spans_cte() -> str:
     listing and the removal-stats readout can never diverge from the
     same span derivation (the simhash_candidate_pairs discipline)."""
     k = _SUBSTR_K
-    return f"""toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    return f"""{TOKS_CTE},
     runs AS (
         SELECT doc_id, i,
                md5(array_to_string(t[i : i + {k - 1}], ' ')) AS h
@@ -2668,10 +2634,7 @@ _WIN_MIN_SHARED = 5
 # report, and the incremental probe so every consumer replays the
 # EXACT same selection the Spark side (winnow_fingerprints) runs.
 _WINNOW_FP_CTES = f"""
-    toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    {TOKS_CTE},
     grams AS (
         SELECT doc_id, i,
                substr(md5(t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]),
@@ -3071,8 +3034,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # it reads "how much duplication does each tier see" and then drills
 # into whichever tier is surprising.
 
-_REPORT_WINNOW_MIN = _WIN_MIN_SHARED
-
 
 @register(
     "dedup_tier_report",
@@ -3231,10 +3192,7 @@ def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one exchange on (band, band_hash) — the same
     aggregation skeleton as candidate generation itself — then a
     7-row per-band reduction. Signatures ride the session-cached
-    MinHash relation (``cached_minhash_sig_cand``); min over
-    duplicated shingles equals min over distinct ones, so its
-    distinct=False build is value-identical to the oracle's distinct
-    shingles."""
+    MinHash relation (``cached_minhash_sig_cand``)."""
     sig, _cand = cached_minhash_sig_cand(spark, sf_dir)
     bands0 = minhash_band_buckets(sig)
     sizes = bands0.groupBy("band", "band_hash").agg(
@@ -3580,10 +3538,7 @@ def dedup_simhash_candidate_histogram(spark: SparkSession, sf_dir: str) -> DataF
 @register(
     "dedup_contamination_sweep",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    WITH {TOKS_CTE},
     {_contam_sh_chain()},
     bench AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 29 = 0),
     tr AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 29 <> 0),

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
+from rdbms_scala_spark.pipeline.dedup import closure_ctes, connected_components_edges
 from rdbms_scala_spark.registry import register
 from rdbms_scala_spark.session import session_relation
 
@@ -602,7 +603,7 @@ WITH img AS (
     FROM documents WHERE doc_id % 3 = 0
 ), rws AS (
     SELECT doc_id, w, h, ckey, pert, unnest(range(h)) AS r FROM img
-), px AS (
+), px AS MATERIALIZED (
     SELECT doc_id, w, h, r, c,
            (ckey*37 + r*11 + c*7
             + CASE WHEN r = pert THEN 128 ELSE 0 END) % 256 AS v
@@ -617,11 +618,11 @@ WITH img AS (
     SELECT cell.doc_id, grow*8 + gcol AS i,
            CASE WHEN s*tn > ts*n THEN 1 ELSE 0 END AS b
     FROM cell JOIN tot ON cell.doc_id = tot.doc_id
-), bands AS (
+), bands AS MATERIALIZED (
     SELECT doc_id, i//16 AS band_idx,
            CAST(sum(b * (CAST(1 AS BIGINT) << (i % 16))) AS BIGINT) AS band_val
     FROM bits GROUP BY doc_id, i//16
-), wide AS (
+), wide AS MATERIALIZED (
     SELECT doc_id,
            max(CASE WHEN band_idx = 0 THEN band_val END) AS band0,
            max(CASE WHEN band_idx = 1 THEN band_val END) AS band1,
@@ -782,17 +783,7 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PHASH_CC_ORACLE = f"""
-    WITH RECURSIVE phash_pairs AS ({_PHASH_ORACLE}),
-    edges AS (
-        SELECT doc_a AS u, doc_b AS v FROM phash_pairs
-        UNION
-        SELECT doc_b AS u, doc_a AS v FROM phash_pairs
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM edges
-        UNION
-        SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
-    )
+    {closure_ctes('phash_pairs', _PHASH_ORACLE)}
     SELECT u AS doc_id, least(u, min(v)) AS component_id
     FROM reach
     GROUP BY u
@@ -816,8 +807,6 @@ def multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, so a session running both pays the decode once). The
     oracle replays pixel -> hash -> band -> verify -> reachability
     fixpoint end to end in one recursive CTE."""
-    from rdbms_scala_spark.pipeline.dedup import connected_components_edges
-
     pairs = dedup_image_phash(spark, sf_dir).select("doc_a", "doc_b")
     labels, _rounds = connected_components_edges(pairs)
     return labels.select("doc_id", "component_id").orderBy("doc_id")

@@ -22,7 +22,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
-from rdbms_scala_spark.pipeline.dedup import tokens
+from rdbms_scala_spark.pipeline.dedup import (
+    TOKS_CTE,
+    _contam_sh_chain,
+    contamination_shingles,
+    tokens,
+    tokens_sql,
+)
 from rdbms_scala_spark.registry import register
 
 # BM25 constants. Literal values are written IDENTICALLY in the Spark
@@ -43,10 +49,7 @@ def _terms_sql() -> str:
 
 
 _BM25_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    WITH {TOKS_CTE},
     dl AS (SELECT doc_id, len(t) AS dlen FROM toks),
     corpus AS (
         SELECT CAST(count(*) AS BIGINT) AS n_docs,
@@ -158,7 +161,7 @@ _VOCAB_SIZE = 100
 
 _VOCAB_ORACLE = f"""
     WITH toks AS (
-        SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+        SELECT {tokens_sql('text')} AS t
         FROM documents
     ),
     counted AS (
@@ -232,11 +235,8 @@ def text_vocab_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNIGRAM_ORACLE = """
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+_UNIGRAM_ORACLE = f"""
+    WITH {TOKS_CTE},
     tok AS (SELECT doc_id, unnest(t) AS token FROM toks),
     counted AS (
         SELECT token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY token
@@ -312,10 +312,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KEYWORDS_PER_DOC = 3
 
 _TFIDF_ORACLE = f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    WITH {TOKS_CTE},
     corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM toks),
     tf AS (
         SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS f,
@@ -564,13 +561,8 @@ _EVAL_TOPK = 10
 
 
 def _retrieval_eval_oracle() -> str:
-    from rdbms_scala_spark.pipeline.dedup import _contam_sh_chain
-
     return f"""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    WITH {TOKS_CTE},
     {_contam_sh_chain()},
     qsh AS (
         SELECT doc_id AS bench_doc_id, shingle FROM sh WHERE doc_id % 29 = 0
@@ -714,8 +706,6 @@ def retrieval_eval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     (24.7 s), which is the right price for scoring strictly more
     (ranks, not just flags) over the same pair relation."""
     from rdbms_scala_spark.pipeline.chunking import _decontam_bench_shingles
-    from rdbms_scala_spark.pipeline.dedup import contamination_shingles
-
     is_bench = F.col("doc_id") % 29 == 0
     qsh = _decontam_bench_shingles(spark, sf_dir)  # (bench_doc_id, shingle)
     train_sh = contamination_shingles(spark, sf_dir).filter(~is_bench)

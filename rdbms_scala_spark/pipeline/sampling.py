@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
+from rdbms_scala_spark.pipeline.dedup import cached_doc_shingles, tokens, tokens_sql
 from rdbms_scala_spark.registry import register
 
 
@@ -600,7 +601,7 @@ _MIX_BUDGET = 10_000_000  # planned training tokens
     oracle=f"""
     WITH per_source AS (
         SELECT source,
-               CAST(sum(len(regexp_split_to_array(lower(trim(text)), '\\s+')))
+               CAST(sum(len({tokens_sql('text')}))
                     AS BIGINT) AS n_tokens
         FROM documents GROUP BY source
     ),
@@ -638,8 +639,6 @@ def pipeline_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: one map-side-combinable token-count aggregate over
     the corpus; everything after operates on the per-source relation
     (broadcast-sized by construction)."""
-    from rdbms_scala_spark.pipeline.dedup import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     per_source = docs.groupBy("source").agg(
         F.sum(F.size(tokens())).alias("n_tokens")
@@ -691,7 +690,7 @@ _DSIR_K = 100
             SELECT doc_id, lang, source, substr(md5(tok), 1, 2) AS hx
             FROM (
                 SELECT doc_id, lang, source,
-                       unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+                       unnest({tokens_sql('text')})
                            AS tok
                 FROM documents
             )
@@ -764,8 +763,6 @@ def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     target flag); the per-doc weight is a second combinable aggregate;
     selection is TakeOrderedAndProject top-k, never a global sort. No
     pairwise anything, no Python."""
-    from rdbms_scala_spark.pipeline.dedup import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     inst = docs.select(
         "doc_id", "lang", "source", F.explode(tokens()).alias("tok")
@@ -868,7 +865,7 @@ def _coverage_oracle() -> str:
             )
         )
         steps.append(f"""
-    sel{r} AS ({prev_sel}),
+    sel{r} AS MATERIALIZED ({prev_sel}),
     cov{r} AS (
         SELECT DISTINCT s.shingle FROM sh s
         WHERE s.doc_id IN (SELECT doc_id FROM sel{r})
@@ -881,7 +878,7 @@ def _coverage_oracle() -> str:
         )
         GROUP BY s.doc_id
     ),
-    pick{r} AS (
+    pick{r} AS MATERIALIZED (
         SELECT doc_id, gain FROM gain{r} ORDER BY gain DESC, doc_id LIMIT 1
     ),
     total{r} AS (
@@ -903,7 +900,7 @@ def _coverage_oracle() -> str:
                    t[i] || ' ' || t[i + 1] || ' ' || t[i + 2] AS shingle
             FROM (
                 SELECT doc_id,
-                       regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+                       {tokens_sql('text')} AS t
                 FROM documents
             ), LATERAL (
                 SELECT unnest(generate_series(1, len(t) - {_COVERAGE_N - 1}))
@@ -947,8 +944,6 @@ def sample_coverage_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, gain) per round, k rounds total — O(k * corpus-shingles)
     overall, no pairwise anything. The DuckDB oracle unrolls the identical greedy chain,
     so the trajectory (ties included) is replayed exactly."""
-    from rdbms_scala_spark.pipeline.dedup import cached_doc_shingles
-
     sh = cached_doc_shingles(spark, sf_dir, n=_COVERAGE_N)
 
     selected: list[tuple[int, int, int, int]] = []

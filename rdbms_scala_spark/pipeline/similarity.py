@@ -646,7 +646,7 @@ def _lloyd_oracle() -> str:
             FROM qcorpus p CROSS JOIN cent{i} c
         ) WHERE rn = 1
     ),
-    cent{i + 1} AS (
+    cent{i + 1} AS MATERIALIZED (
         SELECT c.cent_id, coalesce(u.qc, c.qc) AS qc
         FROM cent{i} c LEFT JOIN (
             SELECT cent_id, list(q ORDER BY dim) AS qc FROM (
@@ -669,7 +669,7 @@ def _lloyd_oracle() -> str:
                               x -> CAST(round(x * {_LLOYD_Q}, 0) AS BIGINT)) AS qv
         FROM embeddings
     ),
-    cent0 AS (
+    cent0 AS MATERIALIZED (
         SELECT vec_id AS cent_id, qv AS qc FROM qcorpus WHERE vec_id < {_IVF_K}
     ),{iteration_ctes},
     cent AS (
@@ -1557,7 +1557,7 @@ def _tri_lsh_oracle() -> str:
             f"FROM (SELECT vec_id, {dots} FROM vecs)"
         )
     lvl_counts = ",\n    ".join(
-        f"c{lv} AS (SELECT band, code & {(1 << (_LSH_ROWS + lv)) - 1} AS b{lv}, "
+        f"c{lv} AS MATERIALIZED (SELECT band, code & {(1 << (_LSH_ROWS + lv)) - 1} AS b{lv}, "
         f"count(*) AS n{lv} FROM codes GROUP BY 1, 2)"
         for lv in range(_TRI_LSH_LEVELS + 1)
     )
@@ -1577,7 +1577,7 @@ def _tri_lsh_oracle() -> str:
                               x -> floor(x * {_LSH_QUANT})) AS vq
         FROM embeddings
     ),
-    codes AS (
+    codes AS MATERIALIZED (
         {' UNION ALL '.join(band_selects)}
     ),
     {lvl_counts},
@@ -1588,7 +1588,7 @@ def _tri_lsh_oracle() -> str:
         FROM codes
         {joins}
     ),
-    buckets AS (
+    buckets AS MATERIALIZED (
         SELECT vec_id, band, lvl,
                code & ((1 << ({_LSH_ROWS} + lvl)) - 1) AS bucket
         FROM finals WHERE lvl IS NOT NULL
@@ -2992,7 +2992,7 @@ def _kcenter_oracle() -> str:
         SELECT vec_id, qv, dmin FROM mind{r}
         ORDER BY dmin DESC, vec_id LIMIT 1
     ),
-    cent{r} AS (
+    cent{r} AS MATERIALIZED (
         SELECT cent_id, qc, round, radius2 FROM cent{r - 1}
         UNION ALL
         SELECT vec_id AS cent_id, qv AS qc, {r} AS round, dmin AS radius2
@@ -3006,7 +3006,7 @@ def _kcenter_oracle() -> str:
                               x -> CAST(round(x * {_KC_Q}, 0) AS BIGINT)) AS qv
         FROM embeddings
     ),
-    cent0 AS (
+    cent0 AS MATERIALIZED (
         SELECT vec_id AS cent_id, qv AS qc, 0 AS round,
                CAST(0 AS BIGINT) AS radius2
         FROM qcorpus ORDER BY vec_id LIMIT 1
@@ -3160,7 +3160,7 @@ def _kmpp_oracle() -> str:
                                    / CAST(t.phi AS DOUBLE))
                         * 4294967296.0) AS BIGINT), 4294967295)), 8, '0')))
     ),
-    cent{r} AS (
+    cent{r} AS MATERIALIZED (
         SELECT cent_id, qc, round FROM cent{r - 1}
         UNION ALL
         SELECT vec_id AS cent_id, qv AS qc, {r} AS round FROM cand{r}
@@ -3174,7 +3174,7 @@ def _kmpp_oracle() -> str:
                               x -> CAST(round(x * {_KC_Q}, 0) AS BIGINT)) AS qv
         FROM embeddings
     ),
-    cent0 AS (
+    cent0 AS MATERIALIZED (
         SELECT vec_id AS cent_id, qv AS qc, 0 AS round
         FROM qcorpus ORDER BY vec_id LIMIT 1
     ),{chain},

@@ -17,9 +17,13 @@ from pyspark.sql import functions as F
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.pipeline.dedup import (
+    TOKS_CTE,
+    TRIGRAM_IDX_CTES,
     cached_doc_shingles,
     shingles_df,
     tokens,
+    tokens_sql,
+    trigram_ctes,
 )
 from rdbms_scala_spark.registry import register
 from rdbms_scala_spark.session import session_relation
@@ -92,7 +96,7 @@ def quality_wt_cte(src: str) -> str:
     (doc_id, w). Embed inside a WITH list."""
     return f"""q_toks AS (
         SELECT doc_id, text, length(text) AS n,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+               {tokens_sql('text')} AS t
         FROM {src}
     ),
     q_feat AS (
@@ -112,10 +116,10 @@ def quality_wt_cte(src: str) -> str:
 
 @register(
     "text_token_count",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, n_chars,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+               {tokens_sql('text')} AS t
         FROM documents
     )
     SELECT doc_id,
@@ -147,7 +151,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 _QUALITY_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id, text, length(text) AS n,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+               {tokens_sql('text')} AS t
         FROM documents
     ),
     feat AS (
@@ -219,7 +223,7 @@ def _langid_oracle() -> str:
     best += "END"
     return f"""
     WITH toks AS (
-        SELECT doc_id, text, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+        SELECT doc_id, text, {tokens_sql('text')} AS t
         FROM documents
     ),
     scored AS (
@@ -268,10 +272,10 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, source,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+               {tokens_sql('text')} AS t
         FROM documents
     )
     SELECT doc_id, source,
@@ -404,10 +408,10 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_length_buckets",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT lang,
-               len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens
+               len({tokens_sql('text')}) AS n_tokens
         FROM documents
     ),
     bucketed AS (
@@ -453,11 +457,8 @@ def text_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_repetition_ratio",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    oracle=f"""
+    WITH {TOKS_CTE},
     tri AS (
         SELECT doc_id,
                list_transform(range(1, len(t) - 1),
@@ -506,15 +507,8 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_ngram_topk",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
+    oracle=f"""
+    WITH {TRIGRAM_IDX_CTES},
     sh AS (
         SELECT t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS trigram
         FROM idx
@@ -536,8 +530,6 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combinable count + TakeOrdered top-k: no global sort,
     the k rows collapse at the driver. Deterministic tie-break on the
     trigram text keeps the cross-engine hash stable."""
-    from rdbms_scala_spark.pipeline.dedup import shingles_df
-
     docs = load_table(spark, sf_dir, "documents")
     sh = shingles_df(docs, n=3, distinct=False)
     return (
@@ -548,10 +540,10 @@ def text_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DATASET_CARD_ORACLE = """
+_DATASET_CARD_ORACLE = f"""
     WITH toks AS (
         SELECT doc_id, lang, source,
-               len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tok,
+               len({tokens_sql('text')}) AS n_tok,
                md5(lower(trim(text))) AS fp
         FROM documents
     )
@@ -639,9 +631,9 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bpe_merge_pairs",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+        SELECT {tokens_sql('text')} AS t
         FROM documents
     ),
     words AS (SELECT unnest(t) AS w FROM toks),
@@ -694,19 +686,8 @@ def text_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_shingle_novelty",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
-    idx AS (
-        SELECT doc_id, t, unnest(range(1, len(t) - 1)) AS i
-        FROM toks WHERE len(t) >= 3
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-        FROM idx
-    ),
+    oracle=f"""
+    WITH {trigram_ctes('sh')},
     firsts AS (SELECT shingle, min(doc_id) AS first_doc FROM sh GROUP BY shingle)
     SELECT s.doc_id,
            CAST(count(*) AS BIGINT) AS n_shingles,
@@ -839,12 +820,12 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_quality_funnel",
-    oracle="""
+    oracle=f"""
     WITH flags AS (
         SELECT d.doc_id,
                d.n_chars >= 100 AS b_len,
                d.lang = 'en' AS b_lang,
-               len(regexp_split_to_array(lower(trim(d.text)), '\\s+')) >= 30
+               len({tokens_sql('d.text')}) >= 30
                    AS b_tok,
                d.doc_id = k.keeper AS b_uniq
         FROM documents d
@@ -947,7 +928,7 @@ _PMI_MIN_CO = 20  # minimum pair co-document support reported
     oracle=f"""
     WITH toks AS (
         SELECT DISTINCT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term
+               unnest({tokens_sql('text')}) AS term
         FROM documents
     ),
     n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM toks),
@@ -1057,7 +1038,7 @@ _SIG_TOP_K = 5
     oracle=f"""
     WITH toks AS (
         SELECT source,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term
+               unnest({tokens_sql('text')}) AS term
         FROM documents
     ),
     tf AS (
@@ -1141,11 +1122,8 @@ def text_source_signature_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bigram_logprob",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents
-    ),
+    oracle=f"""
+    WITH {TOKS_CTE},
     uni AS (
         SELECT unnest(t) AS w, doc_id FROM toks
     ),
@@ -1333,7 +1311,7 @@ _HEAPS_BUCKETS = 10
     ),
     tok AS (
         SELECT doc_id // b.bsize AS bucket,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+               unnest({tokens_sql('text')})
                    AS token
         FROM documents, bounds b
     ),
@@ -1443,10 +1421,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_js_divergence",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
         SELECT source,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+               unnest({tokens_sql('text')})
                    AS token
         FROM documents
     ),
@@ -1533,10 +1511,10 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_readability",
-    oracle="""
+    oracle=f"""
     WITH feats AS (
         SELECT doc_id,
-               CAST(len(regexp_split_to_array(lower(trim(text)), '\\s+'))
+               CAST(len({tokens_sql('text')})
                     AS BIGINT) AS n_words,
                CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
                     AS BIGINT) AS n_sentences,
@@ -1574,8 +1552,6 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-only — three regex counts and one expression per
     row, no shuffle at all until the output sort."""
-    from rdbms_scala_spark.pipeline.dedup import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     feats = docs.select(
         "doc_id",
@@ -1605,12 +1581,12 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_entropy",
-    oracle="""
+    oracle=f"""
     WITH counts AS (
         SELECT doc_id, token, CAST(count(*) AS BIGINT) AS c
         FROM (
             SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(trim(text)), '\\s+'))
+                   unnest({tokens_sql('text')})
                        AS token
             FROM documents
         )
@@ -1655,8 +1631,6 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (doc, token) count aggregate (map-side
     combinable) and one per-doc reduction — the same two-level shape
     as text_vocab_induction, nothing global anywhere."""
-    from rdbms_scala_spark.pipeline.dedup import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select("doc_id", F.explode(tokens()).alias("token"))
@@ -1703,8 +1677,8 @@ _GOPHER_STOPWORDS = (
     "text_gopher_rules",
     oracle=f"""
     WITH d AS (
-        SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w,
-               len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n,
+        SELECT {tokens_sql('text')} AS w,
+               len({tokens_sql('text')}) AS n,
                length(regexp_replace(trim(text), '\\s+', '', 'g')) AS swl,
                length(text) - length(replace(text, '#', '')) AS n_hash,
                (length(text) - length(replace(text, '...', ''))) // 3
@@ -1870,7 +1844,7 @@ _C4_MIN_WORDS = 40  # corpus-scaled; C4's own line rule is < 5 words
     oracle=f"""
     WITH d AS (
         SELECT lower(text) AS lt, trim(text) AS tt,
-               len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n,
+               len({tokens_sql('text')}) AS n,
                length(text) - length(regexp_replace(text, '[.!?]', '', 'g'))
                    AS n_sent
         FROM documents
@@ -2049,7 +2023,7 @@ def _bpe_chain_cte() -> str:
         prev = f"w{r}"
     return f"""words AS (
         SELECT w, CAST(count(*) AS BIGINT) AS n FROM (
-            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+            SELECT unnest({tokens_sql('text')}) AS w
             FROM documents
         ) GROUP BY w
     ),
@@ -2197,7 +2171,7 @@ def _bpe_train_build(
     WITH {_bpe_chain_cte()},
     inst AS (
         SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+               unnest({tokens_sql('text')}) AS w
         FROM documents
     ),
     enc AS (
@@ -2282,7 +2256,7 @@ _NB_MARGIN_CAP_Q = (_NB_MARGIN_MAX_BIN + 1) * _NB_MARGIN_BIN_Q
 _NB_PRED_CTE = f"""
     tok AS (
         SELECT doc_id, source,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+               unnest({tokens_sql('text')}) AS w
         FROM documents
     ),
     vocab AS (
@@ -2689,7 +2663,7 @@ _ZIPF_TOP_RANKS = 1000
     oracle=f"""
     WITH counted AS (
         SELECT w, CAST(count(*) AS BIGINT) AS c FROM (
-            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+            SELECT unnest({tokens_sql('text')}) AS w
             FROM documents
         ) GROUP BY w
     ),
@@ -2806,7 +2780,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang, text, length(text) AS n,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+               {tokens_sql('text')} AS t
         FROM documents
     ),
     feat AS (

@@ -253,7 +253,12 @@ def stats() -> dict:
     """Counters of the session-relation cache: live entries and their
     kinds, lookups served (``hits``) and built (``misses``), seconds
     spent building, and the bytes the block manager holds for the
-    entries' checkpoints (read here, never on the lookup path)."""
+    entries' checkpoints (read here, never on the lookup path).
+
+    ``build_s`` sums every build's wall time, so a build nested in
+    another (``winnow_raw`` inside ``winnow_capped``, ``doc_shingles``
+    inside ``minhash_sig_cand``) is counted twice: once as its own
+    build and once inside the outer one."""
     from pyspark import SparkContext
 
     with _LOCK:
