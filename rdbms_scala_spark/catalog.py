@@ -66,7 +66,7 @@ def table_fingerprint(sf_dir: str, *names: str) -> str:
 #: re-crosses the Py4J boundary (~100ms/table — dominates multi-table
 #: query build time). DataFrames are immutable plans, so sharing one
 #: is safe; Spark's cache manager then also recognizes repeated plans
-#: for .cache() reuse. A scan pins the file listing of its first read,
+#: for SQL-cache reuse. A scan pins the file listing of its first read,
 #: so an entry is valid only while the table's fingerprint is
 #: unchanged: a table rewritten in place is scanned again.
 _df_memo: dict[tuple[str, str, str], tuple[str, DataFrame]] = {}

@@ -34,7 +34,7 @@ from pyspark.sql.window import Window as W
 
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.registry import register
-from rdbms_scala_spark.session import materialize, session_relation
+from rdbms_scala_spark.session import materialize, release, session_relation
 
 # ---------------------------------------------------------------------------
 # shared building blocks
@@ -127,36 +127,11 @@ def cap_shingle_df(sh: DataFrame, max_df: int = MAX_SHINGLE_DF) -> DataFrame:
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-def purge_oversized_buckets(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Drop every row of any bucket (group over ``keys``) larger than
-    ``cap`` — the guard that keeps bucket-pairing joins from going
-    quadratic on mass-duplicate clusters (used by the Levenshtein
-    blocking passes; same idea as ``cap_shingle_df`` for posting
-    lists. The MinHash band join and SimHash chunk join use the fused
-    ``expand_bucket_pairs`` form instead, which applies the same cap
-    inside their one aggregation exchange).
-
-    Join shape mirrors ``cap_shingle_df``: the OVERSIZED key set (tiny
-    by construction — only buckets past the cap) is broadcast for a
-    left_anti join, so ``df`` itself is never shuffled; the only
-    shuffle is the map-side-combined (keys, count) aggregation."""
-    assert "__bn" not in df.columns, (
-        "purge_oversized_buckets reserves column name '__bn' for the "
-        "bucket-size count; rename the input column"
-    )
-    oversized = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bn"))
-        .filter(F.col("__bn") > cap)
-        .select(*keys)
-    )
-    return df.join(F.broadcast(oversized), keys, "left_anti")
-
-
 def expand_bucket_pairs(df, keys, payload, keep, attach=None):
     """Bucket-local i<j candidate-pair expansion with a TRULY bounded
-    aggregation state, shared by the MinHash band join and the SimHash
-    chunk join.
+    aggregation state, the one bucket-pairing primitive (MinHash bands,
+    SimHash chunks, Levenshtein blocks). Its in-exchange purge is the
+    guard ``cap_shingle_df`` keeps on posting lists.
 
     Shape: window-count the bucket sizes over ``keys``, drop every row
     of any bucket failing ``keep(size)`` (a Column predicate; callers
@@ -419,9 +394,10 @@ _BAND_BUCKET_CAP = 64  # max docs per (band, band_hash) in the pair join
 
 
 def minhash_signatures(sh: DataFrame) -> DataFrame:
-    """(doc_id, sig array<string>): per-permutation min of seeded md5
-    hex over the doc's shingles. One aggregation; signature size is
-    fixed (_NUM_PERM values) regardless of doc length.
+    """(doc_id, sig array<string>, n_sh long): per-permutation min of
+    seeded md5 hex over the doc's shingles, and the doc's count of
+    ``sh`` rows (distinct shingles in the MinHash tier). One
+    aggregation; signature size is fixed (_NUM_PERM values).
 
     Permutation hash i is the i%4-th 8-hex-char slice of
     ``md5('<i div 4>:' || shingle)``, compared as a *string*:
@@ -447,24 +423,53 @@ def minhash_signatures(sh: DataFrame) -> DataFrame:
         F.min(F.substring(F.col(f"H{i // 4}"), (i % 4) * 8 + 1, 8)).alias(f"h{i}")
         for i in range(_NUM_PERM)
     ]
-    agg = hashed.groupBy("doc_id").agg(*mins)
-    return agg.select("doc_id", F.array(*[f"h{i}" for i in range(_NUM_PERM)]).alias("sig"))
+    agg = hashed.groupBy("doc_id").agg(*mins, F.count(F.lit(1)).alias("n_sh"))
+    return agg.select("doc_id", F.array(*[f"h{i}" for i in range(_NUM_PERM)]).alias("sig"), "n_sh")
 
 
 def minhash_band_buckets(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, band_hash): each doc's LSH band keys — the
-    banding used by dedup_minhash_lsh, named so tests exercise the
+    """``sig``'s columns plus (band, band_hash), one row per band: the
+    banding of dedup_minhash_lsh, named so tests exercise the
     production constants rather than re-implementing them."""
     r = _ROWS_PER_BAND
     return sig.select(
-        "doc_id",
+        "*",
         F.explode(
             F.expr(
                 f"transform(sequence(0, {_BANDS - 1}), "
                 f"b -> struct(b AS band, md5(concat_ws(',', slice(sig, b * {r} + 1, {r}))) AS bh))"
             )
         ).alias("e"),
-    ).select("doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("band_hash"))
+    ).select(*sig.columns, F.col("e.band").alias("band"), F.col("e.bh").alias("band_hash"))
+
+
+def minhash_candidates(sig: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_match, na, nb): every distinct doc_a < doc_b
+    pair sharing a (band, band_hash) bucket of 2.._BAND_BUCKET_CAP
+    docs of ``minhash_signatures`` rows; ``n_match`` (0.._NUM_PERM)
+    counts the signature positions the two agree on, ``na``/``nb``
+    are their ``n_sh``. Bucket members carry both, so pairs are scored
+    where they are expanded, with no join back to ``sig``. The cap
+    keeps a K-member duplicate cluster from pairing quadratically;
+    it is sound because band_hash is a 128-bit md5, so only genuine
+    near-identical clusters fill a bucket."""
+    n_match = F.expr("size(filter(zip_with(a_sig, b_sig, (x, y) -> x = y), v -> v))")
+    return (
+        expand_bucket_pairs(
+            minhash_band_buckets(sig),
+            keys=["band", "band_hash"],
+            payload=["doc_id", "sig", "n_sh"],
+            keep=lambda bn: (bn >= 2) & (bn <= _BAND_BUCKET_CAP),
+        )
+        .select(
+            F.col("a_doc_id").alias("doc_a"),
+            F.col("b_doc_id").alias("doc_b"),
+            n_match.alias("n_match"),
+            F.col("a_n_sh").alias("na"),
+            F.col("b_n_sh").alias("nb"),
+        )
+        .distinct()
+    )
 
 
 def cached_minhash_sig_cand(
@@ -472,18 +477,18 @@ def cached_minhash_sig_cand(
 ) -> tuple[DataFrame, DataFrame]:
     """The (sig, cand) relations of the MinHash tier, one session
     relation shared by every query built on them — the signature
-    build (_NUM_PERM/4 md5 calls per distinct shingle), the banded
-    exchange and the signature verify join dominate each of those
-    queries, and the session pays them once per corpus. At 100 TB the
-    persisted analog is the signature/candidate tables every
-    production dedup job materializes next to the corpus.
+    build (_NUM_PERM/4 md5 calls per distinct shingle) and the banded
+    pair exchange dominate each of those queries, and the session
+    pays them once per corpus. At 100 TB the persisted analog is the
+    signature/candidate tables every production dedup job
+    materializes next to the corpus.
 
-    ``sig`` is (doc_id, sig array<string>), see
-    ``minhash_signatures``. ``cand`` is (doc_a, doc_b, n_match): every
-    distinct doc_a < doc_b pair that shares a (band, band_hash) bucket
-    of 2.._BAND_BUCKET_CAP docs, and ``n_match``, the int count
-    (0.._NUM_PERM) of signature positions on which the two docs agree;
-    ``n_match / _NUM_PERM`` is the pair's estimated Jaccard."""
+    ``sig`` is (doc_id, sig array<string>, n_sh), see
+    ``minhash_signatures``; ``n_sh`` is the doc's distinct trigram
+    count. ``cand`` is (doc_a, doc_b, n_match, na, nb), see
+    ``minhash_candidates``: the bucket pairs already carry both
+    signatures and shingle counts, so the build has no verify join
+    and ``n_match / _NUM_PERM`` is the pair's estimated Jaccard."""
 
     def build() -> tuple[DataFrame, DataFrame]:
         # The signatures read the session's distinct shingle relation
@@ -492,28 +497,7 @@ def cached_minhash_sig_cand(
         # from sig: without materializing sig first the signature pass
         # would run twice.
         sig = materialize(minhash_signatures(cached_doc_shingles(spark, sf_dir)))
-        # The bucket cap purges mass duplicates before pair expansion:
-        # a K-member duplicate cluster pairs QUADRATICALLY (K=10k ->
-        # 50M pairs from one bucket); the absolute cap is sound because
-        # band_hash is a 128-bit md5, so only genuine near-identical
-        # clusters fill a bucket.
-        pairs = (
-            expand_bucket_pairs(
-                minhash_band_buckets(sig),
-                keys=["band", "band_hash"],
-                payload=["doc_id"],
-                keep=lambda bn: (bn >= 2) & (bn <= _BAND_BUCKET_CAP),
-            )
-            .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
-            .distinct()
-        )
-        sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-        sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-        n_match = F.expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))")
-        cand = pairs.join(sa, "doc_a").join(sb, "doc_b").select(
-            "doc_a", "doc_b", n_match.alias("n_match")
-        )
-        return sig, cand
+        return sig, minhash_candidates(sig)
 
     return session_relation(spark, "minhash_sig_cand", sf_dir, "documents", build)
 
@@ -747,7 +731,9 @@ def _simhash_cand_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             for b in range(64)
         ]
     )
-    fp = bit_sums.select(
+    # read twice below (the banding and the level-2 cap): a checkpoint,
+    # not a CacheManager entry that outlives the session relation
+    fp = materialize(bit_sums.select(
         "doc_id",
         F.expr(
             " + ".join(
@@ -760,7 +746,7 @@ def _simhash_cand_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for b in range(32, 64)
             )
         ).alias("fp_hi"),
-    ).cache()
+    ))
     # TWO-LEVEL banding (the scale ladder). Level 1: the eight 8-bit
     # chunks (pigeonhole: hamming <= 7 guarantees a chunk match) with a
     # FIXED bucket cap — full recall while buckets are small, but the
@@ -809,7 +795,7 @@ def _simhash_cand_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"greatest({_BAND_BUCKET_CAP}, (8 * count(1)) div 65536)"
         ).alias("__cap2")
     )
-    # Fused purge + pair expansion, as in dedup_minhash_lsh: one
+    # Fused purge + pair expansion, as in minhash_candidates: one
     # exchange on (pr, cvk), oversized buckets dropped by the window
     # count BEFORE the member collect (bounded aggregation state — see
     # expand_bucket_pairs), i<j pairs expanded bucket-locally from the
@@ -965,7 +951,9 @@ def connected_components_edges(pairs: DataFrame) -> tuple[DataFrame, int]:
     Per round: two groupBy-min aggregations and two joins, all keyed
     on node ids (hash-partitioned, map-side combinable);
     ``localCheckpoint`` truncates lineage so round N doesn't replay
-    rounds 1..N-1. Convergence probe is two scalars (edge count +
+    rounds 1..N-1, and a round's checkpoint is released once the next
+    is materialized (only the final one, which the labels read, stays).
+    Convergence probe is two scalars (edge count +
     order-insensitive xxhash64 sum) — the edge set is stable exactly
     at the star-forest fixpoint, where every edge is (node,
     component_min).
@@ -1017,15 +1005,18 @@ def connected_components_edges(pairs: DataFrame) -> tuple[DataFrame, int]:
         ).filter(F.col("u") != F.col("v"))
         mins2 = canon.groupBy("u").agg(F.min("v").alias("m"))
         star = canon.join(mins2, "u")
-        E = (
+        nxt = (
             star.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(star.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=False)  # probe(E) materializes it
+            .localCheckpoint(eager=False)  # probe(nxt) materializes it
         )
         rounds += 1
-        cur = probe(E)
+        cur = probe(nxt)
+        # nxt's checkpoint truncated its lineage: E's blocks are dead
+        release(E)
+        E = nxt
         if cur == prev:
             break
         prev = cur
@@ -1146,9 +1137,10 @@ def lev_blocked_pairs(docs: DataFrame, block_cap: int = _LEV_BLOCK_CAP) -> DataF
     quadratic blow-up — per-doc fan-out is <= 2*(block_cap-1)
     regardless of corpus shape. On the real documents table blocks
     max out at ~6 rows, so the cap never fires outside degenerate
-    data. Every key is a plain column expression and the purge a
-    plain grouped count, so the DuckDB oracle reproduces the exact
-    pair space.
+    data. Each pass is one ``expand_bucket_pairs`` over its block key
+    and every key is a plain column expression, so the DuckDB oracle
+    (window-count purge, equi-join) reproduces the exact pair space.
+    ``doc_id`` must be unique.
     """
     text_norm = F.lower(F.trim(F.col("text")))
     keyed = docs.select(
@@ -1162,28 +1154,19 @@ def lev_blocked_pairs(docs: DataFrame, block_cap: int = _LEV_BLOCK_CAP) -> DataF
     )
 
     def blocking_pass(kcol: str, bcol: str) -> DataFrame:
-        ok = purge_oversized_buckets(keyed, ["source", kcol, bcol], block_cap)
-        a = ok.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("source").alias("sa"),
-            F.col("p").alias("pa"),
-            F.col(kcol).alias("ka"),
-            F.col(bcol).alias("ba"),
+        # a NULL key never joins in the oracle's equi-join, so its rows
+        # pair with nothing here either
+        return expand_bucket_pairs(
+            keyed.dropna(subset=["source", kcol, bcol]),
+            ["source", kcol, bcol],
+            payload=["doc_id", "p"],
+            keep=lambda bn: (bn >= 2) & (bn <= block_cap),
+        ).select(
+            F.col("a_doc_id").alias("doc_a"),
+            F.col("b_doc_id").alias("doc_b"),
+            F.col("a_p").alias("pa"),
+            F.col("b_p").alias("pb"),
         )
-        b = ok.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("source").alias("sb"),
-            F.col("p").alias("pb"),
-            F.col(kcol).alias("kb"),
-            F.col(bcol).alias("bb"),
-        )
-        return a.join(
-            b,
-            (F.col("sa") == F.col("sb"))
-            & (F.col("ka") == F.col("kb"))
-            & (F.col("ba") == F.col("bb"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        ).select("doc_a", "doc_b", "pa", "pb")
 
     # distinct() collapses pairs caught by both passes; (pa, pb) are
     # functions of the ids, so the pair key drives the dedup.
@@ -1875,10 +1858,11 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the whole point of LSH). est = k/32 is an exact binary
     fraction on both engines; the error column subtracts the same
     two division results in the same order before the single 4dp
-    round."""
+    round. Both docs' shingle counts ride on the candidate rows
+    (``na``/``nb``, counted by the signature aggregation), so the only
+    pass over the shingles here is the intersection join."""
     sh = cached_doc_shingles(spark, sf_dir)
     _sig, cand = cached_minhash_sig_cand(spark, sf_dir)
-    sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     inter = (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         .join(
@@ -1894,9 +1878,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = F.col("n_match") / F.lit(_NUM_PERM)
     jac = F.col("n_inter") / F.col("n_union")
     return (
-        cand.join(sz.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na")), "doc_a")
-        .join(sz.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb")), "doc_b")
-        .join(inter, ["doc_a", "doc_b"], "left")
+        cand.join(inter, ["doc_a", "doc_b"], "left")
         .withColumn("n_inter", F.coalesce("n_inter", F.lit(0)))
         .withColumn("n_union", F.col("na") + F.col("nb") - F.col("n_inter"))
         .select(
@@ -3191,8 +3173,9 @@ def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one exchange on (band, band_hash) — the same
     aggregation skeleton as candidate generation itself — then a
-    7-row per-band reduction. Signatures ride the session-cached
-    MinHash relation (``cached_minhash_sig_cand``)."""
+    7-row per-band reduction over the band keys of the session-cached
+    signatures (``cached_minhash_sig_cand``; the size aggregate prunes
+    the ``sig``/``n_sh`` columns the bucket rows carry)."""
     sig, _cand = cached_minhash_sig_cand(spark, sf_dir)
     bands0 = minhash_band_buckets(sig)
     sizes = bands0.groupBy("band", "band_hash").agg(

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from rdbms_scala_spark.catalog import load_table
 from rdbms_scala_spark.pipeline.dedup import closure_ctes, connected_components_edges
 from rdbms_scala_spark.registry import register
-from rdbms_scala_spark.session import session_relation
+from rdbms_scala_spark.session import release, session_relation
 
 FEATURE_DIM = 8
 
@@ -890,13 +890,15 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             break
         deg = E.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
         keep = deg.filter(F.col("c") >= _KCORE_K).select("u")
-        E = (
+        nxt = (
             E.join(keep, "u", "left_semi")
             .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=False)  # E.count() materializes it
+            .localCheckpoint(eager=False)  # nxt.count() materializes it
         )
-        cur = E.count()
+        cur = nxt.count()
+        release(E)  # superseded: nxt's checkpoint cut its lineage
+        E = nxt
         if cur == n_edges:
             break
         n_edges = cur

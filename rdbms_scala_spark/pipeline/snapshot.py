@@ -55,7 +55,7 @@ def merge_upsert(
     + union branch) and Spark re-evaluates its lineage both times; if
     deriving the batch is expensive (filtered from the base table,
     remote reads), materialize it first — ``.localCheckpoint(True)``
-    beats ``.cache()`` for one-shot merges because checkpoint blocks
+    beats the SQL cache for one-shot merges because checkpoint blocks
     are released when the DataFrame is garbage-collected, while cache
     entries pin the CacheManager until an explicit unpersist. The
     registered ``pipeline_upsert_snapshot`` demo does exactly this.
@@ -154,9 +154,9 @@ def _standard_merge_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without materialization Spark re-evaluates the lineage at every
     # reference and the plan scans orders 5x. localCheckpoint (eager)
     # collapses the batch to a materialized RDD so the merge plan
-    # scans orders exactly once — and unlike .cache() the blocks are
-    # GC-released, so repeated invocations don't accumulate
-    # CacheManager state.
+    # scans orders exactly once — and unlike a SQL cache entry the
+    # blocks are GC-released, so repeated invocations don't
+    # accumulate CacheManager state.
     return modified.unionByName(inserted).localCheckpoint(eager=True)
 
 
@@ -208,14 +208,18 @@ class SnapshotStore:
         the manifest publish makes it visible — a crash in between
         leaves an orphan data dir (to be vacuumed), never a readable
         half-version. Once the write job has committed, the committer
-        lists its own dir, and the manifest records those data files
-        with ``df.schema``; this is the one listing a version ever
-        gets. Publish is an exclusive ``os.link`` of the
+        lists its own dir, deletes the files whose footer counts 0
+        rows, and the manifest records the rest with ``df.schema``
+        (an empty frame publishes no files); this is the one listing
+        a version ever gets. Publish is an exclusive ``os.link`` of the
         fully-written temp manifest, so a version is never published
         twice — the optimistic-concurrency kernel of Delta's commit
         protocol."""
         import json
         import os
+        import pathlib
+
+        import pyarrow.parquet as pq
 
         vs = self.versions()
         v = (vs[-1] + 1) if vs else 0
@@ -229,12 +233,19 @@ class SnapshotStore:
         # append: the dir is ours and empty; overwrite would delete
         # and recreate it, reopening the claim
         df.write.mode("append").parquet(data_dir)
-        # Spark's own hidden-file rule: _SUCCESS, .crc sidecars
-        files = sorted(
-            os.path.join(data_dir, f)
-            for f in os.listdir(data_dir)
-            if not f.startswith(("_", "."))
-        )
+        # Spark's own hidden-file rule: _SUCCESS, .crc sidecars. Task 0
+        # writes a file even when its partition is empty; the manifest
+        # pins the schema, so that 0-row file and its sidecar go.
+        files = []
+        for f in sorted(os.listdir(data_dir)):
+            if f.startswith(("_", ".")):
+                continue
+            path = os.path.join(data_dir, f)
+            if pq.read_metadata(path).num_rows:
+                files.append(path)
+            else:
+                os.unlink(path)
+                pathlib.Path(data_dir, f".{f}.crc").unlink(missing_ok=True)
         manifest = {
             "version": v,
             "path": data_dir,

@@ -187,7 +187,10 @@ def materialize(value: T) -> T:
     return one(value)
 
 
-def _unpersist(value: object) -> None:
+def release(value: object) -> None:
+    """Unpersist the checkpoint blocks of the DataFrames in ``value``
+    (one or a tuple): every value the cache drops, and each superseded
+    round of an iterative loop. Lazy plans are skipped."""
     from py4j.protocol import Py4JError
 
     for rdd in _checkpoint_rdds(value):
@@ -237,7 +240,7 @@ def session_relation(
         _COUNTS["misses"] += 1
         _RELATIONS.pop(key, None)
     if hit is not None:
-        _unpersist(hit[1])
+        release(hit[1])
     t0 = time.perf_counter()
     value = materialize(build())
     with _LOCK:
@@ -245,7 +248,7 @@ def session_relation(
         stale = [_RELATIONS.pop(k)[1] for k in list(_RELATIONS) if k[0] != app]
         _RELATIONS[key] = (fp, value)
     for old in stale:
-        _unpersist(old)
+        release(old)
     return value
 
 
@@ -285,7 +288,7 @@ def evict() -> None:
         values = [value for _fp, value in _RELATIONS.values()]
         _RELATIONS.clear()
     for value in values:
-        _unpersist(value)
+        release(value)
 
 
 def evict_session_relations(spark: SparkSession) -> None:

@@ -184,7 +184,11 @@ def test_connected_components_chain_converges_logarithmically(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
+    before = _persisted_rdd_ids(spark)
     labels, rounds = dedup.connected_components_edges(chain)
+    # every superseded round's checkpoint is released; the final edge
+    # set stays, since the labels read it lazily
+    assert len(_persisted_rdd_ids(spark) - before) <= 1
     got = {(r.doc_id, r.component_id) for r in labels.collect()}
     assert got == {(i, 0) for i in range(64)}
     assert rounds <= 12, f"expected O(log n) rounds on a chain, got {rounds}"
@@ -528,49 +532,58 @@ def test_minhash_band_bucket_purge_bounds_mass_dup_cluster(spark):
     space through one band bucket: 200 identical docs share every band
     bucket (19900 pairs unpurged); with the bucket cap they are purged
     from the pairwise path entirely, while small planted near-dup
-    pairs elsewhere survive."""
+    pairs elsewhere survive. Each candidate row carries its pair's
+    signature agreement and both docs' distinct-trigram counts."""
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    texts = {
+        1000: "one two three four five six seven eight nine ten",
+        1001: "one two three four five six seven eight nine eleven",
+        # "one two three" twice: 11 trigrams, 10 distinct
+        1002: "one two three four five six seven eight nine ten one two three",
+    }
     docs = spark.createDataFrame(
-        [(i, base) for i in range(200)]  # the mass-dup cluster
-        + [
-            (1000, "one two three four five six seven eight nine ten"),
-            (1001, "one two three four five six seven eight nine eleven"),
-        ],
+        [(i, base) for i in range(200)] + list(texts.items()),  # 0..199: the cluster
         "doc_id long, text string",
     )
-    # the PRODUCTION banding, constants, and candidate path — the
-    # exact expand_bucket_pairs call dedup_minhash_lsh makes, not a
+    # the PRODUCTION signatures and candidate path, not a
     # re-implementation (the gate-scale oracle runs never fill a
     # bucket, so the cap wiring is certified only here); production
     # signs the distinct shingles, and a min over repeated shingles
-    # gives the same signature
+    # gives the same signature (n_sh counts the repeats by design)
     sig = dedup.minhash_signatures(dedup.shingles_df(docs, n=3))
     sig_rep = dedup.minhash_signatures(dedup.shingles_df(docs, n=3, distinct=False))
-    assert sorted(sig.collect()) == sorted(sig_rep.collect())
-    cand = (
-        dedup.expand_bucket_pairs(
-            dedup.minhash_band_buckets(sig),
-            keys=["band", "band_hash"],
-            payload=["doc_id"],
-            keep=lambda bn: (bn >= 2) & (bn <= dedup._BAND_BUCKET_CAP),
-        )
-        .select(F.col("a_doc_id").alias("doc_a"), F.col("b_doc_id").alias("doc_b"))
-        .distinct()
+    assert sorted(sig.select("doc_id", "sig").collect()) == sorted(
+        sig_rep.select("doc_id", "sig").collect()
     )
-    pairs = {(r.doc_a, r.doc_b) for r in cand.collect()}
+    cand = dedup.minhash_candidates(sig).collect()
+    pairs = {(r.doc_a, r.doc_b) for r in cand}
     assert (1000, 1001) in pairs, "small near-dup pair must survive the purge"
+    assert (1000, 1002) in pairs
     assert all(p[0] >= 1000 for p in pairs), f"mass cluster leaked {len(pairs)} pairs"
+    assert len(cand) == len(pairs)
+
+    sigs = {r.doc_id: r.sig for r in sig.collect()}
+
+    def n_trigrams(text):
+        t = text.split()
+        return len({tuple(t[i : i + 3]) for i in range(len(t) - 2)})
+
+    for r in cand:
+        assert r.n_match == sum(x == y for x, y in zip(sigs[r.doc_a], sigs[r.doc_b]))
+        assert (r.na, r.nb) == (n_trigrams(texts[r.doc_a]), n_trigrams(texts[r.doc_b]))
+    assert n_trigrams(texts[1002]) == 10
 
 
-def test_purge_oversized_buckets_int_cap(spark):
-    """With cap 3, a 10-row bucket is purged while the 2-row and 1-row
-    buckets survive."""
-    rows = [("a", i) for i in range(10)] + [("b", 1), ("b", 2), ("c", 1)]
+def test_expand_bucket_pairs_int_cap(spark):
+    """An integer cap keeps the pairs of a bucket of exactly ``cap``
+    rows and drops the whole bucket of ``cap + 1``; a 1-row bucket
+    has no pair."""
+    rows = [("a", i) for i in range(3)] + [("b", i) for i in range(10, 14)] + [("c", 1)]
     df = spark.createDataFrame(rows, "k string, v long")
-    got_int = sorted(
-        (r.k, r.v) for r in dedup.purge_oversized_buckets(df, ["k"], 3).collect()
-    )
-    assert got_int == [("b", 1), ("b", 2), ("c", 1)]
+    got = dedup.expand_bucket_pairs(
+        df, ["k"], payload=["v"], keep=lambda bn: (bn >= 2) & (bn <= 3)
+    ).collect()
+    assert sorted((r.a_v, r.b_v) for r in got) == [(0, 1), (0, 2), (1, 2)]
 
 
 def test_merge_upsert_row_fates_and_broadcast(spark):
@@ -686,6 +699,32 @@ def test_snapshot_read_is_pinned_to_manifest_files(spark, tmp_path):
     os.remove(parts[-1])
     with _pytest.raises(Exception, match="PATH_NOT_FOUND"):
         store.read(v).collect()
+
+
+def test_snapshot_commit_publishes_only_files_with_rows(spark, tmp_path):
+    """Spark writes task 0's file even when its partition is empty;
+    the commit drops every 0-row file, and a frame with no rows at all
+    publishes no file and reads back empty with its schema."""
+    import json
+
+    from rdbms_scala_spark.pipeline.snapshot import SnapshotStore
+
+    store = SnapshotStore(spark, str(tmp_path / "store"))
+
+    def files(v):
+        with open(os.path.join(store.manifest_dir, f"{v}.json")) as fh:
+            return json.load(fh)["files"]
+
+    frame = spark.range(0, 10, numPartitions=4)
+    v = store.commit(frame.filter("id >= 5"))
+    assert files(v) and all(pq.read_metadata(f).num_rows > 0 for f in files(v))
+    assert sorted(r.id for r in store.read(v).collect()) == [5, 6, 7, 8, 9]
+
+    v_empty = store.commit(frame.filter("id < 0"))
+    assert files(v_empty) == []
+    empty = store.read(v_empty)
+    assert empty.count() == 0
+    assert [(f.name, f.dataType) for f in empty.schema] == [(f.name, f.dataType) for f in frame.schema]
 
 
 def _write_clustered_embeddings(tmp_path):
@@ -1816,6 +1855,16 @@ def test_evict_session_relations_clears_every_kind(spark, sf_copy):
     assert not {_checkpoint_rdd_id(sig), _checkpoint_rdd_id(cand)} & _persisted_rdd_ids(spark)
     # the next lookup rebuilds
     assert dedup.cached_minhash_sig_cand(spark, sf_copy)[0] is not sig
+
+
+def test_simhash_build_leaves_no_cache_manager_entry(spark, sf_copy):
+    """The SimHash build's fingerprint intermediate is a checkpoint,
+    not a SQL cache entry: once the session relation is evicted the
+    CacheManager holds nothing."""
+    spark.catalog.clearCache()
+    dedup.simhash_candidate_pairs(spark, sf_copy)
+    session.evict()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_session_relation_materializes_lazy_builds(spark, sf_copy):
